@@ -11,8 +11,9 @@ On first use, or after any source changed, graft and the benchmark are
 compiled from source with sbt into .bench_build/. One JVM then
 generates the workload's inputs from the seed, runs its passes through
 graft's public API and checks every output; DuckDB computes the oracle
-results it asks for. Two more JVMs only start a GraftSession, so
-set-up time is a median of two. The last stdout line is one JSON
+results it asks for, beside the untimed warm-up passes. One more JVM
+only starts a GraftSession, so set-up time is a median of two. The
+last stdout line is one JSON
 object: the end-to-end metrics with --trace 0, the per-layer metrics
 with --trace 1. The full record (context, samples, checks, spans) goes
 to .bench_build/results/. Exits non-zero when a check fails or the run
@@ -199,21 +200,32 @@ def jvm(cp, args, work, n_cores, heap_size, deadline):
     _children.append(proc)
     timer = threading.Timer(max(1.0, deadline - time.time()), proc.kill)
     timer.start()
-    ready, result = None, None
+    ready, result, oracles = None, None, []
+
+    def serve_oracle(spec):
+        # the JVM goes on with untimed passes meanwhile and reads the
+        # answer when it needs the expected outputs
+        try:
+            t = time.perf_counter()
+            run_oracle(spec, work, n_cores)
+            log(f"duckdb oracles ran in {time.perf_counter() - t:.2f} s")
+            reply = "ok"
+        except Exception as e:  # reported to the JVM, which fails the run
+            reply = f"fail {e!r}".replace("\n", " ")
+        try:
+            proc.stdin.write(reply + "\n")
+            proc.stdin.flush()
+        except OSError:
+            pass  # the JVM is gone; its exit code tells
+
     try:
         for line in proc.stdout:
             line = line.rstrip("\n")
             if line == "@@ready":
                 ready = time.perf_counter() - t0
             elif line.startswith("@@oracle "):
-                try:
-                    t = time.perf_counter()
-                    run_oracle(line.split(" ", 1)[1], work, n_cores)
-                    log(f"duckdb oracles ran in {time.perf_counter() - t:.2f} s")
-                    proc.stdin.write("ok\n")
-                except Exception as e:  # reported to the JVM, which counts the failure
-                    proc.stdin.write(f"fail {e!r}\n".replace("\n", " ") + "\n")
-                proc.stdin.flush()
+                oracles.append(threading.Thread(target=serve_oracle, args=(line.split(" ", 1)[1],), daemon=True))
+                oracles[-1].start()
             elif line.startswith("@@result "):
                 result = json.loads(line.split(" ", 1)[1])
             else:
@@ -224,6 +236,8 @@ def jvm(cp, args, work, n_cores, heap_size, deadline):
         if proc.poll() is None:
             proc.kill()
             proc.wait()
+        for t in oracles:
+            t.join()
     return ready, result, code
 
 

@@ -100,17 +100,14 @@ object Backfill {
       "changes_per_block" -> (n + transfers) / Shape.blocks, "bundle_blocks" -> BundleSize)
   }
 
-  final case class Expected(scd2: (Long, BigDecimal), csv: (Long, BigDecimal), poi: (Long, BigDecimal),
-                            vidKeys: (Long, BigDecimal), accountRows: Long, transferRows: Long)
-
-  /** Expected outputs, computed once before any pass:
+  /** Expected outputs, computed once per run, outside every timed pass:
     *   - SCD2 rows from the DuckDB window oracle;
     *   - CSV lines from the per-key path: `CsvSerializer.serialize` over
     *     the oracle's SCD2 rows and the generated transfers, unbundled;
     *   - the POI chain from `PoiStableHash.chainSequential`, the
     *     reference-faithful sequential fold, on one thread;
     *   - the (id, block) keys every vid must cover. */
-  def expected(ctx: Ctx, orc: String): Expected = {
+  def expected(ctx: Ctx, orc: String): Digest.Named = {
     val spark = ctx.spark
     ctx.duckdb(orc, Map("changes" -> s"$orc/changes.parquet"), Seq("scd2" -> Scd2Sql))
     val scd2 = spark.read.parquet(s"$orc/scd2.parquet")
@@ -136,9 +133,9 @@ object Backfill {
     import spark.implicits._
     val poi = PoiStableHash.chainSequential(blocks).toDF("block_num", "poi")
     ctx.phase("sequential poi chain computed")
-    Expected(Digest.of(scd2), Digest.of(csvLines(spark, s"$orc/csv")), Digest.of(poi),
-      Digest.of(changes.filter(col("op") =!= "DELETE").select("id", "block_num")),
-      scd2.count(), transfers.count())
+    Digest.ofAll(Seq("scd2" -> scd2, "csv" -> csvLines(spark, s"$orc/csv"), "poi" -> poi,
+      "vid_keys" -> changes.filter(col("op") =!= "DELETE").select("id", "block_num"),
+      "account_rows" -> scd2.select(lit(0)), "transfer_rows" -> transfers.select(lit(0))))
   }
 
   /** One pass's outputs, cached in memory until the pass is checked. */
@@ -174,31 +171,70 @@ object Backfill {
     PassOut(versions, vids, poi, manifests, decoded)
   }
 
-  /** Check one pass's outputs against the expectations; returns the
-    * per-layer output row counts. */
-  def checkPass(ctx: Ctx, exp: Expected, dir: String, out: PassOut): Map[String, Long] = {
-    val scd2 = Digest.of(out.versions)
-    ctx.check("scd2 rows == duckdb window oracle", scd2 == exp.scd2, s"${Digest.show(scd2)} vs ${Digest.show(exp.scd2)}")
-    val csv = Digest.of(csvLines(ctx.spark, s"$dir/csv"))
-    ctx.check("bundled csv lines == per-key CsvSerializer lines", csv == exp.csv, s"${Digest.show(csv)} vs ${Digest.show(exp.csv)}")
-    val poi = Digest.of(out.poi.select("block_num", "poi"))
-    ctx.check("poi chain == chainSequential", poi == exp.poi, s"${Digest.show(poi)} vs ${Digest.show(exp.poi)}")
-    out.manifests.zip(Seq(exp.accountRows, exp.transferRows)).foreach { case (m, want) =>
+  /** What a pass produced, as far as the checks look at it. */
+  final case class Obs(digests: Digest.Named, manifests: Seq[(String, Boolean, Long)],
+                       vids: (Long, Long, Long, Long), rows: Map[String, Long])
+
+  /** Observe one pass's outputs: digests of the SCD2 rows, the CSV
+    * lines, the POI chain and the vid keys in one job, whether each
+    * manifest's vid ranges are gapless (and their row sum), and the
+    * vid count, min, max and distinct count. */
+  def observe(ctx: Ctx, dir: String, out: PassOut): Obs = {
+    val d = Digest.ofAll(Seq("scd2" -> out.versions, "csv" -> csvLines(ctx.spark, s"$dir/csv"),
+      "poi" -> out.poi.select("block_num", "poi"), "vid_keys" -> out.vids.select("id", "block_num")))
+    val manifests = out.manifests.map { m =>
       val fs = m.files
       val gapless = fs.headOption.forall(_.vidStart == 1) &&
         fs.zip(fs.drop(1)).forall { case (a, b) => b.vidStart == a.vidEnd + 1 && b.bundle > a.bundle } &&
         fs.forall(f => f.vidEnd - f.vidStart + 1 == f.nRows)
-      ctx.check(s"${m.entity} manifest vid ranges gapless, sum == rows",
-        gapless && fs.map(_.nRows).sum == want, s"gapless=$gapless sum=${fs.map(_.nRows).sum} want=$want")
+      (m.entity, gapless, fs.map(_.nRows).sum)
     }
     val v = out.vids.agg(count(lit(1)), min("vid"), max("vid"), countDistinct("vid")).head()
-    val n = exp.vidKeys._1
-    val keys = Digest.of(out.vids.select("id", "block_num"))
+    val vids = (v.getLong(0), v.getLong(1), v.getLong(2), v.getLong(3))
+    val rows = Map("version" -> d("scd2")._1, "csv_write" -> d("csv")._1,
+      "manifest" -> out.manifests.map(_.files.size.toLong).sum, "vid" -> vids._1, "poi" -> d("poi")._1) ++
+      (if (ctx.tracer.enabled) Map("decode" -> out.decoded.count()) else Map.empty)
+    Obs(d, manifests, vids, rows)
+  }
+
+  /** Check one pass's observed outputs against the expected ones. */
+  def check(ctx: Ctx)(o: Obs, exp: Digest.Named): Unit = {
+    Seq("scd2" -> "scd2 rows == duckdb window oracle",
+      "csv" -> "bundled csv lines == per-key CsvSerializer lines",
+      "poi" -> "poi chain == chainSequential").foreach { case (k, what) =>
+      ctx.check(what, o.digests(k) == exp(k), s"${Digest.show(o.digests(k))} vs ${Digest.show(exp(k))}")
+    }
+    o.manifests.zip(Seq(exp("account_rows")._1, exp("transfer_rows")._1)).foreach { case ((entity, gapless, sum), want) =>
+      ctx.check(s"$entity manifest vid ranges gapless, sum == rows",
+        gapless && sum == want, s"gapless=$gapless sum=$sum want=$want")
+    }
+    val (n, lo, hi, distinct) = o.vids
+    val want = exp("vid_keys")._1
     ctx.check("vids are 1..n, distinct, one per non-delete change",
-      v.getLong(0) == n && v.getLong(1) == 1 && v.getLong(2) == n && v.getLong(3) == n && keys == exp.vidKeys,
-      s"count=${v.get(0)} min=${v.get(1)} max=${v.get(2)} distinct=${v.get(3)} keys=${Digest.show(keys)} want n=$n")
-    Map("decode" -> out.decoded.count(), "version" -> scd2._1, "csv_write" -> csv._1,
-      "manifest" -> out.manifests.map(_.files.size.toLong).sum, "vid" -> v.getLong(0), "poi" -> poi._1)
+      n == want && lo == 1 && hi == want && distinct == want && o.digests("vid_keys") == exp("vid_keys"),
+      s"count=$n min=$lo max=$hi distinct=$distinct keys=${Digest.show(o.digests("vid_keys"))} want n=$want")
+  }
+
+  /** One pass into `dir`, observed when asked. Its cached frames (and
+    * the prefix frame poiChain persists) are dropped afterwards, so
+    * every pass starts alike. */
+  def onePass(ctx: Ctx, dir: String)(observe: Boolean): Layers.Pass[Obs] = {
+    ctx.dropDir(dir)
+    val mark = ctx.tracer.mark
+    val t0 = System.nanoTime()
+    val res = ctx.attempt("backfill pass")(pass(ctx.spark, ctx.tracer, s"${ctx.work}/input/payloads.parquet", dir))
+    val s = (System.nanoTime() - t0) / 1e9
+    ctx.phase(f"pass $s%.3f s")
+    val obs = if (observe) res.map(o => this.observe(ctx, dir, o)) else None
+    ctx.spark.catalog.clearCache()
+    val spans = if (!ctx.tracer.enabled) Map.empty[String, Map[String, Double]]
+      else {
+        val m = ctx.spanMetrics(mark, obs.map(_.rows).getOrElse(Map.empty))
+        val (bytes, files) = ctx.dataFiles(s"$dir/csv")
+        m.updated("csv_write", m.getOrElse("csv_write", Map.empty[String, Double]) ++
+          Map("mb_out" -> bytes / 1048576.0, "files" -> files.toDouble))
+      }
+    Layers.Pass(s, obs, spans)
   }
 
   def run(ctx: Ctx): mutable.Map[String, Any] = {
@@ -215,32 +251,10 @@ object Backfill {
     val props = properties(accts.toDF(), trs.count())
     spark.catalog.clearCache()
     ctx.phase("inputs generated")
-    val exp = expected(ctx, orc)
-    ctx.phase("expected outputs computed")
     val nChanges = props("account_changes").asInstanceOf[Long] + props("transfers").asInstanceOf[Long]
-
-    def onePass(): (Double, Map[String, Map[String, Double]]) = {
-      val dir = s"${ctx.work}/pass"
-      ctx.dropDir(dir)
-      val mark = ctx.tracer.mark
-      val t0 = System.nanoTime()
-      val res = ctx.attempt("backfill pass")(pass(ctx.spark, ctx.tracer, s"$in/payloads.parquet", dir))
-      val s = (System.nanoTime() - t0) / 1e9
-      ctx.phase(f"pass $s%.3f s")
-      val rows = res.map(o => checkPass(ctx, exp, dir, o)).getOrElse(Map.empty)
-      // drop the pass's cached frames (and the prefix frame poiChain
-      // persists) so every pass starts alike
-      ctx.spark.catalog.clearCache()
-      if (!ctx.tracer.enabled) (s, Map.empty)
-      else {
-        val m = ctx.spanMetrics(mark, rows)
-        val (bytes, files) = ctx.dataFiles(s"$dir/csv")
-        (s, m.updated("csv_write", m.getOrElse("csv_write", Map.empty[String, Double]) ++
-          Map("mb_out" -> bytes / 1048576.0, "files" -> files.toDouble)))
-      }
-    }
-
-    val Layers.Passes(first, warm, timed, traces) = Layers.passes(ctx)(onePass)
+    val pass = onePass(ctx, s"${ctx.work}/pass") _
+    val Layers.Passes(first, warm, timed, traces, want) =
+      Layers.passes(ctx, () => expected(ctx, orc), check(ctx))(pass)
 
     val out = mutable.Map[String, Any]("properties" -> props, "records" -> nChanges,
       "pass_s" -> timed.map(_._1), "warmup_pass_s" -> warm, "first_pass_s" -> first)
@@ -258,7 +272,9 @@ object Backfill {
       ctx.spark = Main.session(1, parts, ctx.work)
       ctx.tracer = new Tracer(ctx.tracer.runId + "-local1", ctx.spark.sparkContext)
       ctx.tracer.enabled = true
-      val (_, m1) = onePass()
+      val p1 = pass(true)
+      p1.obs.foreach(check(ctx)(_, want))
+      val m1 = p1.spans
       extra ++= Spans.map(sp => s"$sp.speedup_1_to_n" ->
         m1.get(sp).map(_("self_s")).getOrElse(0.0) / math.max(layers.getOrElse(s"$sp.self_s", 0.0), 1e-9))
       out("local1_layers") = m1

@@ -43,13 +43,17 @@ object Curate extends Serializable {
   private def rng(seed: Long, stream: Long, i: Long): SplittableRandom =
     new SplittableRandom(seed * 0x9E3779B97F4A7C15L + stream * 0x632BE59BD9B4E019L + i)
 
-  /** Seeded vocabulary: distinct lowercase syllable words. */
+  /** Seeded vocabulary: distinct lowercase syllable words, shortest
+    * first, so Zipf rank follows length as in natural language. The
+    * seed picks the words but not how long the frequent ones are: in
+    * seeded order the top few ranks alone moved a corpus's size in
+    * characters, and the work of a pass with it, by ±8% between seeds. */
   def vocabulary(seed: Long, n: Int): Array[String] = {
     val r = rng(seed, 30, 0)
     val syl = Array("ka", "lo", "mi", "ne", "ru", "ta", "shi", "vo", "pe", "dra", "gu", "zen", "bi", "qua", "fo", "tel")
     val out = mutable.LinkedHashSet.empty[String]
     while (out.size < n) out += (0 until 1 + r.nextInt(4)).map(_ => syl(r.nextInt(syl.length))).mkString
-    out.toArray
+    out.toArray.sortBy(_.length)
   }
 
   def docs(spark: SparkSession, seed: Long, s: CorpusShape, parts: Int): DataFrame = {
@@ -107,11 +111,57 @@ object Curate extends Serializable {
     }.toDF()
   }
 
+  def corpus(ctx: Ctx): String = s"${ctx.work}/corpus"
+
+  /** Expected results: the SparkEntry.oracleSql twins, run in DuckDB. */
+  def expected(ctx: Ctx): Digest.Named = {
+    val d = corpus(ctx)
+    val orc = s"${ctx.work}/oracle"
+    ctx.duckdb(orc, Map("documents" -> s"$d/documents.parquet", "embeddings" -> s"$d/embeddings.parquet"),
+      Keys.map { case (span, key, _) => span -> graft.SparkEntry.oracleSql(key) })
+    Digest.ofAll(Keys.map { case (span, _, _) => span -> ctx.spark.read.parquet(s"$orc/$span.parquet") })
+  }
+
+  def check(ctx: Ctx)(got: Digest.Named, want: Digest.Named): Unit =
+    Keys.foreach { case (span, key, _) =>
+      ctx.check(s"$key == SparkEntry.oracleSql twin", got(span) == want(span),
+        s"${Digest.show(got(span))} vs ${Digest.show(want(span))}")
+    }
+
+  /** One pass into `dir`; observed, its outputs' digests. Every pass
+    * starts from nothing memoized for the corpus, so it times the
+    * builds, not cache hits. */
+  def onePass(ctx: Ctx, dir: String)(observe: Boolean): Layers.Pass[Digest.Named] = {
+    val spark = ctx.spark
+    val d = corpus(ctx)
+    ctx.dropDir(dir)
+    SessionMemo.invalidateAll(spark, d)
+    spark.catalog.clearCache()
+    val mark = ctx.tracer.mark
+    val t0 = System.nanoTime()
+    val ok = ctx.attempt("curate pass") {
+      ctx.tracer.span("pass") {
+        Keys.foreach { case (span, _, query) =>
+          ctx.tracer.span(span) {
+            query(spark, d).write.mode("overwrite").parquet(s"$dir/$span")
+          }
+        }
+      }
+    }.isDefined
+    val s = (System.nanoTime() - t0) / 1e9
+    ctx.phase(f"pass $s%.3f s")
+    val got = if (!ok || !observe) None
+      else Some(Digest.ofAll(Keys.map { case (span, _, _) => span -> spark.read.parquet(s"$dir/$span") }))
+    val spans = if (!ctx.tracer.enabled) Map.empty[String, Map[String, Double]]
+      else ctx.spanMetrics(mark, got.getOrElse(Map.empty).map { case (k, v) => k -> v._1 })
+    Layers.Pass(s, got, spans)
+  }
+
   def run(ctx: Ctx): mutable.Map[String, Any] = {
     val spark = ctx.spark
     val a = ctx.args
     val parts = 2 * a.cores
-    val d = s"${ctx.work}/corpus"
+    val d = corpus(ctx)
     docs(spark, a.seed, Shape, parts).write.mode("overwrite").parquet(s"$d/documents.parquet")
     embeddings(spark, a.seed, Shape, parts).write.mode("overwrite").parquet(s"$d/embeddings.parquet")
     val stats = spark.read.parquet(s"$d/documents.parquet")
@@ -120,44 +170,9 @@ object Curate extends Serializable {
       "exact_dup_share" -> Shape.exactDupShare, "near_dup_share" -> Shape.nearDupShare,
       "noise_share" -> Shape.noiseShare, "vocab" -> Shape.vocab, "zipf_s" -> Shape.zipfS,
       "mean_chars" -> stats.getDouble(1), "vectors" -> Shape.vectors, "embedding_clusters" -> Shape.clusters)
+    ctx.phase("inputs generated")
 
-    // expected results: the SparkEntry.oracleSql twins, run in DuckDB
-    val orc = s"${ctx.work}/oracle"
-    ctx.duckdb(orc, Map("documents" -> s"$d/documents.parquet", "embeddings" -> s"$d/embeddings.parquet"),
-      Keys.map { case (span, key, _) => span -> graft.SparkEntry.oracleSql(key) })
-    ctx.phase("inputs generated, oracles run")
-    val want = Keys.map { case (span, _, _) => span -> Digest.of(spark.read.parquet(s"$orc/$span.parquet")) }.toMap
-
-    def pass(dir: String): Unit = ctx.tracer.span("pass") {
-      Keys.foreach { case (span, _, query) =>
-        ctx.tracer.span(span) {
-          query(spark, d).write.mode("overwrite").parquet(s"$dir/$span")
-        }
-      }
-    }
-
-    def onePass(): (Double, Map[String, Map[String, Double]]) = {
-      val dir = s"${ctx.work}/pass"
-      ctx.dropDir(dir)
-      // every pass starts from nothing memoized for this corpus, so it
-      // times the builds, not cache hits
-      SessionMemo.invalidateAll(spark, d)
-      spark.catalog.clearCache()
-      val mark = ctx.tracer.mark
-      val t0 = System.nanoTime()
-      val ok = ctx.attempt("curate pass")(pass(dir)).isDefined
-      val s = (System.nanoTime() - t0) / 1e9
-      ctx.phase(f"pass $s%.3f s")
-      val rows = if (!ok) Map.empty[String, Long] else Keys.map { case (span, key, _) =>
-        val got = Digest.of(spark.read.parquet(s"$dir/$span"))
-        ctx.check(s"$key == SparkEntry.oracleSql twin", got == want(span),
-          s"${Digest.show(got)} vs ${Digest.show(want(span))}")
-        span -> got._1
-      }.toMap
-      (s, if (ctx.tracer.enabled) ctx.spanMetrics(mark, rows) else Map.empty)
-    }
-
-    val Layers.Passes(first, warm, timed, traces) = Layers.passes(ctx)(onePass)
+    val ps = Layers.passes(ctx, () => expected(ctx), check(ctx))(onePass(ctx, s"${ctx.work}/pass"))
 
     var extra = Map.empty[String, Double]
     if (a.trace) {
@@ -171,8 +186,8 @@ object Curate extends Serializable {
         "curation.kept_share" -> kept / Shape.docs)
     }
     val out = mutable.Map[String, Any]("properties" -> props, "records" -> Shape.docs,
-      "pass_s" -> timed.map(_._1), "warmup_pass_s" -> warm, "first_pass_s" -> first)
-    Layers.finish(ctx, out, timed, traces, Shape.docs.toDouble, extra)
+      "pass_s" -> ps.timed.map(_._1), "warmup_pass_s" -> ps.warm, "first_pass_s" -> ps.first)
+    Layers.finish(ctx, out, ps.timed, ps.traces, Shape.docs.toDouble, extra)
     out
   }
 }

@@ -1,6 +1,8 @@
 package graftbench
 
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,7 +60,18 @@ object Main {
     // shutdown work, which is not set-up time
     if (a.mode == "setup") Runtime.getRuntime.halt(0)
     val ctx = new Ctx(spark, a)
-    val out = a.workload match {
+    val code =
+      try { run(ctx); 0 }
+      catch { case e: Throwable => e.printStackTrace(); 1 }
+    // the result is out: end without Spark's shutdown work, which no
+    // metric covers (the next run empties the work directory)
+    System.out.flush()
+    System.err.flush()
+    Runtime.getRuntime.halt(code)
+  }
+
+  private def run(ctx: Ctx): Unit = {
+    val out = ctx.args.workload match {
       case "backfill" => Backfill.run(ctx)
       case "curate" => Curate.run(ctx)
       case w => throw new IllegalArgumentException(s"unknown workload $w")
@@ -66,14 +79,13 @@ object Main {
     out("jvm") = Map(
       "peak_rss_mb" -> peakRssMb(),
       "jdk" -> System.getProperty("java.version"),
-      "spark" -> spark.version,
-      "cores" -> a.cores,
+      "spark" -> ctx.spark.version,
+      "cores" -> ctx.args.cores,
       "heap_mb" -> Runtime.getRuntime.maxMemory / (1 << 20))
     out("attempted") = ctx.attempted
     out("failed") = ctx.failed
     out("failures") = ctx.failures.toSeq
     emit("@@result " + Json(out.toMap))
-    ctx.spark.stop()
   }
 
   def emit(line: String): Unit = { println(line); System.out.flush() }
@@ -136,7 +148,8 @@ final class Ctx(var spark: SparkSession, val args: Main.Args) {
     }
 
   /** Ask the harness to run DuckDB queries: each (name, sql) result is
-    * written to `<dir>/<name>.parquet` over views named by `tables`. */
+    * written to `<dir>/<name>.parquet` over views named by `tables`.
+    * Called from one thread at a time: the reply is read from stdin. */
   def duckdb(dir: String, tables: Map[String, String], queries: Seq[(String, String)]): Unit = {
     val spec = Json(Map(
       "tables" -> tables,
@@ -211,7 +224,19 @@ object Digest {
     (r.getLong(0), if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
   }
 
+  /** Digests of several frames in one Spark job, keyed like `dfs`. */
+  def ofAll(dfs: Seq[(String, DataFrame)]): Named = {
+    val r = dfs.map { case (k, df) => df.select(lit(k).as("k"), rowHash(df).as("h")) }
+      .reduce(_ unionByName _).groupBy("k").agg(count(lit(1)), sum(col("h"))).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), if (r.isNullAt(2)) BigDecimal(0) else BigDecimal(r.getDecimal(2)))))
+      .toMap
+    dfs.map { case (k, _) => k -> r.getOrElse(k, (0L, BigDecimal(0))) }.toMap
+  }
+
   def show(d: (Long, BigDecimal)): String = s"${d._1} rows / ${d._2}"
+
+  /** Named digests: the expected outputs of a run. */
+  type Named = Map[String, (Long, BigDecimal)]
 }
 
 /** Statistics over a run's samples. */
@@ -265,33 +290,50 @@ object Json {
 
 /** Shared pass bookkeeping of the batch workloads. */
 object Layers {
-  /** Untimed passes after the cold one: the JIT is still settling in
-    * the first warm pass, and a median over a window that sometimes
-    * holds it and sometimes not reads two levels. */
-  val WarmUpPasses = 1
+  /** Untimed passes after the cold one, at least. Pass times still fall
+    * over the first few warm passes while the JIT settles, and a median
+    * over a window that sometimes holds them and sometimes not reads two
+    * levels. */
+  val WarmUpPasses = 4
   /** Timed passes a run makes at least, however long they take. */
   val MinPasses = 3
 
-  final case class Passes(first: Double, warm: Seq[Double], timed: Seq[(Double, Boolean)],
-                          traces: Seq[Map[String, Map[String, Double]]])
+  /** One pass: its seconds, what it produced (when it was observed and
+    * did not fail) and its span metrics (when traced). */
+  final case class Pass[O](seconds: Double, obs: Option[O], spans: Map[String, Map[String, Double]])
 
-  /** The cold pass, the warm-up, then timed passes until `--seconds`
-    * have passed (at least [[MinPasses]]). A traced run traces every
-    * other timed pass; `timed` marks which. */
-  def passes(ctx: Ctx)(pass: () => (Double, Map[String, Map[String, Double]])): Passes = {
-    val (first, _) = pass()
-    val warm = Seq.fill(WarmUpPasses)(pass()._1)
+  final case class Passes(first: Double, warm: Seq[Double], timed: Seq[(Double, Boolean)],
+                          traces: Seq[Map[String, Map[String, Double]]], expected: Digest.Named)
+
+  /** The cold pass, then the warm-up passes while `expected` computes
+    * the expected outputs on another thread (DuckDB oracles, reference
+    * paths: work that must stay out of every timed window, so it runs
+    * beside passes that are not timed), then timed passes until
+    * `--seconds` have passed (at least [[MinPasses]]). The cold pass and
+    * every timed pass are checked with `check`; warm-up passes are
+    * neither timed nor checked. A traced run traces every other timed
+    * pass; `timed` marks which. */
+  def passes[O](ctx: Ctx, expected: () => Digest.Named, check: (O, Digest.Named) => Unit)
+               (pass: Boolean => Pass[O]): Passes = {
+    val cold = pass(true)
+    val exp = Future(expected())(ExecutionContext.global)
+    val warm = mutable.ArrayBuffer.empty[Double]
+    while (warm.size < WarmUpPasses || !exp.isCompleted) warm += pass(false).seconds
+    val want = Await.result(exp, Duration.Inf)
+    ctx.phase("expected outputs ready")
+    cold.obs.foreach(check(_, want))
     val timed = mutable.ArrayBuffer.empty[(Double, Boolean)]
     val traces = mutable.ArrayBuffer.empty[Map[String, Map[String, Double]]]
     val start = System.nanoTime()
     while ((System.nanoTime() - start) / 1e9 < ctx.args.seconds || timed.size < MinPasses) {
       ctx.tracer.enabled = ctx.args.trace && timed.size % 2 == 0
-      val (s, m) = pass()
-      timed += ((s, ctx.tracer.enabled))
-      if (ctx.tracer.enabled) traces += m
+      val p = pass(true)
+      p.obs.foreach(check(_, want))
+      timed += ((p.seconds, ctx.tracer.enabled))
+      if (ctx.tracer.enabled) traces += p.spans
     }
     ctx.tracer.enabled = false
-    Passes(first, warm, timed.toSeq, traces.toSeq)
+    Passes(cold.seconds, warm.toSeq, timed.toSeq, traces.toSeq, want)
   }
 
   /** Per-layer medians over traced passes, keyed `<span>.<metric>`. */
