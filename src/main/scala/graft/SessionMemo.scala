@@ -17,23 +17,42 @@ import org.apache.spark.sql.SparkSession
   *     expensive; two racing callers must not both run a training loop
   *     whose loser would leak persisted RDDs);
   *   - `invalidate` is the escape hatch when a key's underlying data
-  *     changes mid-session (memoized artifacts are otherwise as stale
-  *     as any cached plan).
+  *     changes mid-session; a caller that can fingerprint the source
+  *     cheaply passes it as the `stamp`, and an entry built under an
+  *     older stamp is released and rebuilt instead of served stale.
+  *
+  * `release` frees what an artifact pins (persisted frames, cached
+  * RDDs). It runs when an entry is invalidated or replaced by a newer
+  * stamp — not for entries of stopped sessions, whose blocks died with
+  * their context. Dropping a reference alone frees nothing: a
+  * persisted frame stays registered with the CacheManager, and its
+  * blocks stay in the block manager, until it is unpersisted.
   */
-final class SessionMemo[V] {
-  private val map = TrieMap.empty[(SparkSession, String), V]
+final class SessionMemo[V](release: V => Unit = (_: V) => ()) {
+  private val map = TrieMap.empty[(SparkSession, String), (Long, V)]
 
-  def getOrBuild(s: SparkSession, key: String)(build: => V): V = {
+  def getOrBuild(s: SparkSession, key: String, stamp: Long = 0L)(build: => V): V = {
     map.keysIterator.filter(_._1.sparkContext.isStopped).foreach(map.remove)
-    map.synchronized(map.getOrElseUpdate((s, key), build))
+    val k = (s, key)
+    map.synchronized {
+      map.get(k) match {
+        case Some((st, v)) if st == stamp => v
+        case _ =>
+          map.remove(k).foreach { case (_, stale) => release(stale) }
+          val v = build
+          map.put(k, (stamp, v))
+          v
+      }
+    }
   }
 
-  /** Drop the artifact for (session, key); the next consumer rebuilds.
-    * Returns true when an entry was present. Dropping the reference
-    * does not eagerly free cached/checkpointed blocks — Spark's block
-    * manager evicts them under memory pressure once unreferenced. */
+  /** Drop and release the artifact for (session, key); the next
+    * consumer rebuilds. Returns true when an entry was present. */
   def invalidate(s: SparkSession, key: String): Boolean =
-    map.remove((s, key)).isDefined
+    map.synchronized(map.remove((s, key))) match {
+      case Some((_, v)) => release(v); true
+      case None => false
+    }
 }
 
 /** Registry of the library's named memos, so a caller who rewrote a
@@ -46,13 +65,15 @@ object SessionMemo {
     TrieMap.empty[String, (SessionMemo[_], Class[_])]
 
   /** Create a memo registered under `name` (idempotent per name —
-    * operator objects are singletons, so each name binds once).
+    * operator objects are singletons, so each name binds once, and a
+    * repeat registration keeps the first `release`).
     * Re-registering a name with a DIFFERENT value type fails here,
     * at the registration site — the erased cast would otherwise let
     * two operators silently share one memo and surface as a
     * ClassCastException far from the collision. */
-  def named[V](name: String)(implicit ct: scala.reflect.ClassTag[V]): SessionMemo[V] = {
-    val m = new SessionMemo[V]
+  def named[V](name: String, release: V => Unit = (_: V) => ())(
+      implicit ct: scala.reflect.ClassTag[V]): SessionMemo[V] = {
+    val m = new SessionMemo[V](release)
     registry.putIfAbsent(name, (m, ct.runtimeClass)) match {
       case None => m
       case Some((existing, cls)) =>

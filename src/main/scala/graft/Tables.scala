@@ -57,20 +57,26 @@ object Tables {
     * so memoize it per (session, dir/table); a rewritten dir gets a
     * new key (the harnesses write derived corpora to fresh dirs).
     *
-    * In-place rewrites are detected by folding the table directory's
-    * mtime into the memo key: an `overwrite` write replaces the
-    * directory contents, bumping its mtime, so the next read builds a
-    * fresh file index instead of serving the stale one (one local
-    * stat per call — no Spark job). Paths a local stat cannot see
-    * (object-store URIs on a real cluster) fold in 0 and keep the
-    * immutable-dir contract; `SessionMemo.invalidate(s, key,
-    * "tables")` remains the explicit escape hatch there. */
+    * In-place rewrites are detected by stamping the entry with the
+    * table directory's mtime ([[mtime]]): an `overwrite` write
+    * replaces the directory contents, bumping its mtime, so the next
+    * read builds a fresh file index instead of serving the stale one
+    * (one local stat per call — no Spark job). Paths a local stat
+    * cannot see (object-store URIs on a real cluster) stamp 0 and keep
+    * the immutable-dir contract; `SessionMemo.invalidate(s,
+    * s"$dir/$name.parquet", "tables")` remains the explicit escape
+    * hatch there. */
   private val readMemo = SessionMemo.named[DataFrame]("tables")
+
+  /** mtime of `dir`'s `name` table — the cheap source fingerprint the
+    * reader memo and the memos of artifacts derived from the table
+    * stamp their entries with; 0 where a local stat cannot see. */
+  private[graft] def mtime(dir: String, name: String): Long =
+    try new java.io.File(s"$dir/$name.parquet").lastModified catch { case _: Exception => 0L }
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val mtime = try new java.io.File(path).lastModified catch { case _: Exception => 0L }
-    readMemo.getOrBuild(spark, s"$path@$mtime") {
+    readMemo.getOrBuild(spark, path, mtime(dir, name)) {
       spark.read.parquet(path)
     }
   }

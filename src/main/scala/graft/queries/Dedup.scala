@@ -825,14 +825,24 @@ object Dedup {
     * one other doc — i.e. its representative has a band edge, OR it
     * has an exact twin (twins always pair; <3-token docs have no
     * signature and never appear, twin or not). */
-  // memoized per (session, dir): the label-propagation loop runs real
-  // jobs at build time and persists its edge/label stages; dd_cluster
-  // and tx_curation both consume the result, so one build serves both
-  // (plan-level cache reuse can't dedupe the loop's per-call persists)
-  private val clusterMemo = graft.SessionMemo.named[DataFrame]("dd_cluster")
+  /** The dd_cluster result as a standing table: the persisted
+    * `(doc_id, cluster_id)` frame plus the summary its consumers gate
+    * on — the loser count (clustered docs that are not their
+    * component's minimum) and the clustered docs' min/max doc_id
+    * ((0, 0) when nothing clusters) — all taken by the one action that
+    * fills the cache. */
+  final case class ClusterTable(frame: DataFrame, losers: Long, minDocId: Long, maxDocId: Long)
 
-  def ddCluster(s: SparkSession, d: String): DataFrame =
-    clusterMemo.getOrBuild(s, d) {
+  // memoized per (session, dir), stamped with documents.parquet's
+  // mtime so an in-place corpus rewrite rebuilds instead of serving
+  // stale labels from the cache. dd_cluster, dd_keep_best and
+  // tx_curation all read the one persisted table; invalidation (or a
+  // newer stamp) unpersists it.
+  private val clusterMemo = graft.SessionMemo.named[ClusterTable]("dd_cluster",
+    (t: ClusterTable) => t.frame.unpersist(blocking = false): Unit)
+
+  private[graft] def clusterTable(s: SparkSession, d: String): ClusterTable =
+    clusterMemo.getOrBuild(s, d, Tables.mtime(d, "documents")) {
       import org.apache.spark.storage.StorageLevel
       graft.plans.GraftExtensions.ensureRegistered(s)
       val docs = Tables.documents(s, d)
@@ -850,13 +860,25 @@ object Dedup {
       val repLabels = connectedComponents(starEdges(repBands))
         .select(col("doc_id").as("keep_id"), col("cluster_id").as("rep_cluster"))
       val signedReps = repBands.select(col("doc_id").as("keep_id")).distinct()
-      hashed.join(groups, "text_hash")
+      val frame = hashed.join(groups, "text_hash")
         .join(signedReps, Seq("keep_id"), "left_semi") // <3-token docs never cluster
         .join(repLabels, Seq("keep_id"), "left")
         .filter(col("n_dups") >= 2 || col("rep_cluster").isNotNull)
         .select(col("doc_id"),
           coalesce(col("rep_cluster"), col("keep_id")).as("cluster_id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val r = frame.agg(count(when(col("cluster_id") =!= col("doc_id"), 1)),
+        min(col("doc_id")), max(col("doc_id"))).head()
+      // the frame's buffers are loaded now, so dropping its inputs'
+      // caches frees them without recompiling the frame (a
+      // non-cascading uncache re-plans only dependents not yet loaded)
+      groups.unpersist(blocking = false)
+      repBands.unpersist(blocking = false)
+      if (r.isNullAt(1)) ClusterTable(frame, 0L, 0L, 0L)
+      else ClusterTable(frame, r.getLong(0), r.getLong(1), r.getLong(2))
     }
+
+  def ddCluster(s: SparkSession, d: String): DataFrame = clusterTable(s, d).frame
 
   // ---- #29d incremental clustering ------------------------------------
 
@@ -1375,21 +1397,10 @@ object Dedup {
     * (alpha ≤ 1000) ≪ 53 | (stop ≤ 1000) ≪ 43 | (2^43−1 − doc_id)
     * stays inside a non-negative long with disjoint fields. alpha/stop
     * are ≤ 1000 BY CONSTRUCTION (integer per-mille of a subset count);
-    * the doc_id bound is CHECKED at runtime ([[docIdBounds]]) and the
-    * struct path below serves any corpus that violates it. */
+    * the doc_id bound is CHECKED at runtime against the clustered docs'
+    * bounds ([[ClusterTable]]) and the struct path below serves any
+    * corpus that violates it. */
   private[graft] val KeepBestIdMask = (1L << 43) - 1L
-
-  /** Memoized (min, max) of documents.doc_id — one column-pruned agg
-    * job per (session, dir), the runtime guard for packed-key paths. */
-  private val docIdBoundsMemo =
-    graft.SessionMemo.named[(Long, Long)]("dd_doc_id_bounds")
-  private[graft] def docIdBounds(s: SparkSession, d: String): (Long, Long) =
-    docIdBoundsMemo.getOrBuild(s, d) {
-      val r = Tables.documents(s, d)
-        .agg(min(col("doc_id")), max(col("doc_id"))).head()
-      if (r.isNullAt(0) || r.isNullAt(1)) (0L, 0L)
-      else (r.getLong(0), r.getLong(1))
-    }
 
   /** The packed-key serve: lexicographic max over
     * (alpha, stop, −doc_id) ≡ numeric max over the bit-packed long
@@ -1399,7 +1410,7 @@ object Dedup {
     * where the struct form SORT-aggregated the joined corpus by
     * cluster_id (round 13, guide §2.3 narrower types; the
     * gl_squash_latest playbook). Requires 0 ≤ doc_id ≤
-    * [[KeepBestIdMask]] — caller checks [[docIdBounds]]. */
+    * [[KeepBestIdMask]] — caller checks the [[ClusterTable]] bounds. */
   private[graft] def keepBestPacked(joined: DataFrame): DataFrame =
     joined
       .select(col("cluster_id"), expr(
@@ -1425,12 +1436,13 @@ object Dedup {
           .getField("alpha_x1000").as("keep_alpha_x1000"))
 
   def ddKeepBest(s: SparkSession, d: String): DataFrame = {
-    val clusters = ddCluster(s, d)
+    val clusters = clusterTable(s, d)
     val quality = graft.queries.TextAnalysis.txQualityScore(s, d)
       .select(col("doc_id"), col("alpha_x1000"), col("stop_x1000"))
-    val joined = clusters.join(quality, "doc_id")
-    val (lo, hi) = docIdBounds(s, d)
-    if (lo >= 0L && hi <= KeepBestIdMask) keepBestPacked(joined)
+    // the argmax only ever sees clustered doc_ids, so the clustered
+    // docs' bounds are the packing guard
+    val joined = clusters.frame.join(quality, "doc_id")
+    if (clusters.minDocId >= 0L && clusters.maxDocId <= KeepBestIdMask) keepBestPacked(joined)
     else keepBestStruct(joined)
   }
 

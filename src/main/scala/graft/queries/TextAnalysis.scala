@@ -243,11 +243,6 @@ object TextAnalysis {
     }
   }
 
-  /** Memoized loser-set row count for [[txCuration]]'s broadcast gate
-    * (one cheap count over the persisted cluster frame per session). */
-  private val curationLosersMemo =
-    graft.SessionMemo.named[Long]("tx_curation_losers_count")
-
   /** #34b tx_curation — the whole training-data curation job as ONE
     * dataflow, the composition a real corpus build runs: quality gate
     * (token count + alpha ratio) → near-dup removal (drop every doc
@@ -263,22 +258,18 @@ object TextAnalysis {
     * pipeline, not just its pieces, is hash-gated. */
   def txCuration(s: SparkSession, d: String): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(s)
-    val losersRaw = Dedup.ddCluster(s, d)
+    val clusters = Dedup.clusterTable(s, d)
+    val losersRaw = clusters.frame
       .filter(col("cluster_id") =!= col("doc_id")).select("doc_id")
-    // Round 13 (guide §3.1): the loser set arrives from the CC loop's
-    // localCheckpoint — a LogicalRDD with no stats — so the STATIC
-    // planner put the anti-join through SortMergeJoin: the CORPUS side
-    // paid a full exchange AND sort against a pair-bounded loser list
-    // (plans/r13/tx_curation_before.txt operators (4)(5)). AQE repaired
-    // it at runtime where enabled, but the repair belongs in the plan:
-    // broadcast the losers when their measured count fits (one
-    // memoized count job over the already-persisted cluster frame —
-    // the dd_lev_verify gate pattern, same bound). Past the bound the
-    // static shuffle anti-join returns, which is the correct
-    // data-proportional shape at 100 TB.
-    val fits = curationLosersMemo.getOrBuild(s, d)(losersRaw.count()) <=
-      Dedup.LevBroadcastMaxDocs
-    val losers = if (fits) broadcast(losersRaw) else losersRaw
+    // broadcast the losers when their count — taken when the cluster
+    // table was filled, so no job here — fits (the dd_lev_verify gate
+    // pattern, same bound): a shuffle anti-join exchanges and sorts the
+    // whole corpus against a pair-bounded loser list
+    // (plans/r13/tx_curation_before.txt operators (4)(5)). Past the
+    // bound the shuffle anti-join is the correct data-proportional
+    // shape at 100 TB.
+    val losers =
+      if (clusters.losers <= Dedup.LevBroadcastMaxDocs) broadcast(losersRaw) else losersRaw
     Tables.documents(s, d)
       .withColumn("w", toks(col("text")))
       .withColumn("n_tok", size(col("w")).cast("long"))

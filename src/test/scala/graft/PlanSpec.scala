@@ -181,12 +181,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("tx_curation: loser anti-join broadcasts under AQE, no cartesian anywhere") {
-    // the loser set arrives from the CC loop's localCheckpoint — a
-    // LogicalRDD with no stats, so the STATIC planner conservatively
-    // plans a shuffle anti-join (correct at 100 TB, where the loser set
-    // is data-proportional in the worst case). AQE re-plans it as a
-    // broadcast join at runtime once the actual size is known — assert
-    // on the FINAL adaptive plan, which is the plan that really runs.
+    // the loser set is a filter over the persisted cluster table; the
+    // broadcast is gated on the loser count taken when that table was
+    // filled (past the bound the shuffle anti-join is the correct
+    // 100 TB shape). Assert on the FINAL adaptive plan, which is the
+    // plan that really runs.
     val df = graft.queries.TextAnalysis.txCuration(spark, sf)
     df.collect() // lets AQE finalize with runtime stats
     val p = physical(df)

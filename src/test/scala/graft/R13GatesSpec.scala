@@ -68,8 +68,9 @@ class R13GatesSpec extends SparkSpec {
       .forall(_.getClass.getSimpleName == "HashAggregateExec"), p.toString)
     // negative / >2^43 doc_ids: the packed precondition fails — the
     // serve must route them to the struct path, whose answer is the
-    // contract. (ddKeepBest itself checks docIdBounds; this pins the
-    // fallback's correctness on ids the packing cannot represent.)
+    // contract. (ddKeepBest itself checks the cluster table's doc_id
+    // bounds; this pins the fallback's correctness on ids the packing
+    // cannot represent.)
     val adversarial = keepFrame(Seq(
       (1L, -5L, 700L, 700L), (1L, -4L, 700L, 700L),
       (2L, Dedup.KeepBestIdMask + 7L, 1L, 1L), (2L, 3L, 0L, 999L)))

@@ -20,6 +20,20 @@ class SessionMemoSpec extends SparkSpec {
     assert(builds === 3)
   }
 
+  test("a newer stamp releases and rebuilds; invalidate releases") {
+    val released = scala.collection.mutable.Buffer.empty[Int]
+    val memo = new SessionMemo[Int](released += _)
+    assert(memo.getOrBuild(spark, "a", 1L)(10) === 10)
+    assert(memo.getOrBuild(spark, "a", 1L)(99) === 10) // same stamp: served
+    assert(released.isEmpty)
+    assert(memo.getOrBuild(spark, "a", 2L)(20) === 20) // newer stamp: rebuilt
+    assert(released === Seq(10))
+    assert(memo.invalidate(spark, "a"))
+    assert(released === Seq(10, 20))
+    assert(!memo.invalidate(spark, "a"))
+    assert(released === Seq(10, 20))
+  }
+
   test("concurrent callers for one key build exactly once") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
