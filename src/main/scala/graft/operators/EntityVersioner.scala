@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -17,6 +17,18 @@ import org.apache.spark.sql.expressions.Window
   *     — `lead(block_num) OVER (PARTITION BY id ORDER BY block_num)`;
   *   - a DELETE closes the prior version and opens nothing.
   *
+  * Every operator takes a change stream `(id, block_num, op, value)`
+  * with `id` of whatever type the reader gives: the reference's string
+  * id ([[graft.sources.EntityChanges.changes]]) or the raw numeric key
+  * it is the cast of ([[graft.sources.EntityChanges.changesNumericKey]]).
+  * Before any exchange the op becomes a boolean `del`, so with a long
+  * id every exchange and sort key is an 8-byte word and every
+  * aggregation buffer is fixed-width (squash stays a HashAggregate with
+  * map-side partials; a string in the buffer demotes it to a
+  * SortAggregate that sorts the corpus). Outputs emit
+  * `CAST(id AS STRING)` — the reference's entity key, and a no-op that
+  * Catalyst drops when the id already is a string.
+  *
   * Scale (SURVEY.md §6): ONE shuffle on `id`. Entity ids are
   * high-cardinality and per-id history is small, so partitions stay
   * balanced at 100 TB; there is no driver-side state at all, unlike the
@@ -26,14 +38,43 @@ object EntityVersioner {
 
   private val byId = Window.partitionBy("id").orderBy("block_num")
 
+  private def changeCols(changes: DataFrame): DataFrame =
+    changes.select(col("id"), col("block_num"), col("op"), col("value"))
+
+  /** `(id, block_num, del, value)` — the op folded to the one bit every
+    * operator reads. */
+  private def flagged(changes: DataFrame): DataFrame =
+    changes.select(col("id"), col("block_num"),
+      (col("op") === "DELETE").as("del"), col("value"))
+
+  /** The reference's string entity key, cast after the exchange. */
+  private def emit(df: DataFrame): DataFrame =
+    df.withColumn("id", col("id").cast("string"))
+
+  /** [[scd2Versions]] in state form: the id keeps the reader's type —
+    * the shape the incremental memo persists, so merging stays on it. */
+  private[graft] def scd2State(changes: DataFrame): DataFrame =
+    flagged(changes)
+      .withColumn("end_block", lead(col("block_num"), 1).over(byId))
+      .filter(!col("del"))
+      .select(col("id"), col("block_num").as("start_block"), col("end_block"), col("value"))
+
+  /** [[squashLatest]] in state form (the reader's id type). */
+  private[graft] def squashState(changes: DataFrame): DataFrame =
+    flagged(changes)
+      .groupBy(col("id"))
+      .agg(
+        max(col("block_num")).as("last_block"),
+        max_by(col("del"), col("block_num")).as("last_del"),
+        max_by(col("value"), col("block_num")).as("value"))
+      .filter(!col("last_del"))
+      .select(col("id"), col("last_block"), col("value"))
+
   /** #1 gl_scd2_versions — full version history. `end_block` is NULL for
     * the version still open at the stop block (reference
     * csvprocessor/entity.go:23-29 emits `[start,)` for those). */
   def scd2Versions(changes: DataFrame): DataFrame =
-    changes
-      .withColumn("end_block", lead(col("block_num"), 1).over(byId))
-      .filter(col("op") =!= "DELETE")
-      .select(col("id"), col("block_num").as("start_block"), col("end_block"), col("value"))
+    emit(scd2State(changes))
 
   /** #2 gl_squash_latest — final state per id at the stop block,
     * equivalent to the reference's `flushAllEntities` of the in-memory
@@ -41,15 +82,7 @@ object EntityVersioner {
     * window: partial (map-side) aggregation cuts the shuffle to
     * ~|distinct ids| rows before the exchange. */
   def squashLatest(changes: DataFrame): DataFrame =
-    changes
-      .groupBy(col("id"))
-      .agg(
-        max(col("block_num")).as("last_block"),
-        max_by(col("op"), col("block_num")).as("last_op"),
-        max_by(col("value"), col("block_num")).as("value")
-      )
-      .filter(col("last_op") =!= "DELETE")
-      .select(col("id"), col("last_block"), col("value"))
+    emit(squashState(changes))
 
   /** #3 gl_immutable_block — immutable entities skip versioning: one row
     * per change carrying its creation block (`block$` column, reference
@@ -63,62 +96,38 @@ object EntityVersioner {
     * (reference processor.go:285-296: DELETE writes the prior version
     * with a closed range and drops the id from state). */
   def deleteTombstone(changes: DataFrame): DataFrame =
-    changes
+    emit(flagged(changes)
       .withColumn("end_block", lead(col("block_num"), 1).over(byId))
-      .withColumn("next_op", lead(col("op"), 1).over(byId))
-      .filter(col("op") =!= "DELETE" && col("next_op") === "DELETE")
-      .select(col("id"), col("block_num").as("start_block"), col("end_block"), col("value"))
+      .withColumn("next_del", lead(col("del"), 1).over(byId))
+      .filter(!col("del") && col("next_del"))
+      .select(col("id"), col("block_num").as("start_block"), col("end_block"), col("value")))
 
-  /** #2b gl_squash_incremental — incremental latest-state maintenance:
-    * the prior squash result re-enters as synthetic changes with the
-    * new batch; ids whose last change was a DELETE are already absent
-    * from the prior state, exactly like the reference's map after
-    * `delete(entities, id)`. Per-increment cost: |live ids| + |batch|
-    * rows through one max_by agg. */
-  def squashIncremental(changes: DataFrame, splitBlock: Long): DataFrame =
-    squashIncrementalFrom(
-      squashLatest(changes.filter(col("block_num") < splitBlock)),
-      changes.filter(col("block_num") >= splitBlock))
-
-  /** The merge against an ALREADY-BUILT standing squash state — the
-    * form a real ingest runs (and the query layer memoizes): prior
-    * state re-enters as synthetic changes beside the batch. */
-  def squashIncrementalFrom(priorSquash: DataFrame, batch: DataFrame): DataFrame = {
-    val priorState = priorSquash
-      .select(col("id"), col("last_block").as("block_num"),
-        lit("UPDATE").as("op"), col("value"))
-    val newBatch = batch
-      .select(col("id"), col("block_num"), col("op"), col("value"))
-    squashLatest(priorState.unionByName(newBatch))
+  /** #2b gl_squash_incremental — incremental latest-state maintenance
+    * against an already-built standing state ([[squashState]]; a real
+    * ingest keeps it on disk, the query layer memoizes it): the prior
+    * state re-enters as synthetic changes with the new batch. Ids whose
+    * last change was a DELETE are already absent from it, exactly like
+    * the reference's map after `delete(entities, id)`. Per-increment
+    * cost: |live ids| + |batch| rows through one max_by agg. */
+  def squashIncrementalFrom(priorState: DataFrame, batch: DataFrame): DataFrame = {
+    val priorAsChanges = priorState.select(col("id"), col("last_block").as("block_num"),
+      lit("UPDATE").as("op"), col("value"))
+    squashLatest(priorAsChanges.unionByName(changeCols(batch)))
   }
 
   /** #1c gl_scd2_incremental — the production merge path: given the
-    * version store built from blocks < `splitBlock` and only the NEW
-    * changes >= `splitBlock`, produce the same history as a full
+    * version store ([[scd2State]]) built from the blocks before the
+    * batch and only the NEW changes, produce the same history as a full
     * recompute — closed history is carried over untouched, open
     * versions re-enter the window as synthetic changes alongside the
     * new batch. At 100 TB this is the difference between windowing one
     * bundle (+ |live ids| state rows) per increment and windowing the
     * whole chain; the correctness gate IS the full-history oracle. */
-  def scd2Incremental(changes: DataFrame, splitBlock: Long): DataFrame = {
-    // persisted: closed history AND the open-version re-feed both read
-    // this window's output — exchange reuse shares the shuffle but
-    // would run the WindowExec twice
-    val prior = scd2Versions(changes.filter(col("block_num") < splitBlock))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scd2IncrementalFrom(prior, changes.filter(col("block_num") >= splitBlock))
-  }
-
-  /** The merge against an ALREADY-BUILT version store (the query layer
-    * memoizes the store; a real ingest reads it from disk). */
-  def scd2IncrementalFrom(prior: DataFrame, batch: DataFrame): DataFrame = {
-    val closedHistory = prior.filter(col("end_block").isNotNull)
-    val openAsChanges = prior.filter(col("end_block").isNull)
-      .select(col("id"), col("start_block").as("block_num"),
-        lit("UPDATE").as("op"), col("value"))
-    val newBatch = batch
-      .select(col("id"), col("block_num"), col("op"), col("value"))
-    closedHistory.unionByName(scd2Versions(openAsChanges.unionByName(newBatch)))
+  def scd2IncrementalFrom(priorState: DataFrame, batch: DataFrame): DataFrame = {
+    val closedHistory = priorState.filter(col("end_block").isNotNull)
+    val openAsChanges = priorState.filter(col("end_block").isNull)
+      .select(col("id"), col("start_block").as("block_num"), lit("UPDATE").as("op"), col("value"))
+    emit(closedHistory.unionByName(scd2State(openAsChanges.unionByName(changeCols(batch)))))
   }
 
   /** #16 gl_asof_lookup — graph-node time travel: entity state as-of
@@ -127,96 +136,8 @@ object EntityVersioner {
     * before any further join — this is a filter over the SCD2 output,
     * never a re-scan of the change stream. */
   def asofLookup(changes: DataFrame, atBlock: Long): DataFrame =
-    scd2Versions(changes)
+    emit(scd2State(changes)
       .filter(col("start_block") <= atBlock &&
         (col("end_block").isNull || col("end_block") > atBlock))
-      .select(col("id"), col("start_block"), col("value"))
-
-  // ---- all-numeric serving twins (round 12 optimization) -------------
-  //
-  // Same operators over [[graft.sources.EntityChanges.changesOpcode]]:
-  // the per-entity exchange/sort keys are the raw 8-byte `uid` (the
-  // string id is its bijective cast, reattached on the post-exchange
-  // rows) and the op travels as an int opcode, so
-  //   - the squash aggregation's buffer is all fixed-width →
-  //     HashAggregate with genuine map-side partials, where the string
-  //     form demoted to SortAggregate (two corpus sorts by string id);
-  //   - the SCD2 windows hash-partition and sort 8-byte longs instead
-  //     of UTF8Strings.
-  // Results are IDENTICAL by construction (VersionerNumericSpec pins
-  // every pair equal on the corpus); outputs emit the same string id.
-
-  private val byUid = Window.partitionBy("uid").orderBy("block_num")
-  private val DeleteOpc = graft.sources.EntityChanges.DeleteOpc
-  private val UpdateOpc = graft.sources.EntityChanges.UpdateOpc
-
-  /** [[scd2Versions]] in state form: keyed by the raw numeric uid —
-    * the shape the incremental memo persists (merging stays numeric). */
-  private[graft] def scd2VersionsNumericState(changesOpc: DataFrame): DataFrame =
-    changesOpc
-      .withColumn("end_block", lead(col("block_num"), 1).over(byUid))
-      .filter(col("opc") =!= DeleteOpc)
-      .select(col("uid"), col("block_num").as("start_block"),
-        col("end_block"), col("value"))
-
-  /** [[scd2Versions]] served numeric — same output schema/rows. */
-  def scd2VersionsNumeric(changesOpc: DataFrame): DataFrame =
-    scd2VersionsNumericState(changesOpc)
-      .select(col("uid").cast("string").as("id"),
-        col("start_block"), col("end_block"), col("value"))
-
-  /** [[squashLatest]]'s state form (numeric key, no output cast). */
-  private[graft] def squashLatestNumericState(changesOpc: DataFrame): DataFrame =
-    changesOpc
-      .groupBy(col("uid"))
-      .agg(
-        max(col("block_num")).as("last_block"),
-        max_by(col("opc"), col("block_num")).as("last_opc"),
-        max_by(col("value"), col("block_num")).as("value"))
-      .filter(col("last_opc") =!= DeleteOpc)
-      .select(col("uid"), col("last_block"), col("value"))
-
-  /** [[squashLatest]] served numeric — same output schema/rows, but the
-    * aggregation is a two-phase HashAggregate (all-fixed-width buffer:
-    * long/int/double) instead of the string form's SortAggregate. */
-  def squashLatestNumeric(changesOpc: DataFrame): DataFrame =
-    squashLatestNumericState(changesOpc)
-      .select(col("uid").cast("string").as("id"), col("last_block"), col("value"))
-
-  /** [[squashIncrementalFrom]] over a NUMERIC standing state. */
-  def squashIncrementalFromNumeric(priorState: DataFrame, batchOpc: DataFrame): DataFrame = {
-    val priorAsChanges = priorState
-      .select(col("uid"), col("last_block").as("block_num"),
-        lit(UpdateOpc).as("opc"), col("value"))
-    squashLatestNumeric(priorAsChanges.unionByName(batchOpc))
-  }
-
-  /** [[scd2IncrementalFrom]] over a NUMERIC standing version store. */
-  def scd2IncrementalFromNumeric(priorState: DataFrame, batchOpc: DataFrame): DataFrame = {
-    val emit = (df: DataFrame) =>
-      df.select(col("uid").cast("string").as("id"),
-        col("start_block"), col("end_block"), col("value"))
-    val closedHistory = priorState.filter(col("end_block").isNotNull)
-    val openAsChanges = priorState.filter(col("end_block").isNull)
-      .select(col("uid"), col("start_block").as("block_num"),
-        lit(UpdateOpc).as("opc"), col("value"))
-    emit(closedHistory)
-      .unionByName(scd2VersionsNumeric(openAsChanges.unionByName(batchOpc)))
-  }
-
-  /** [[deleteTombstone]] served numeric — same output schema/rows. */
-  def deleteTombstoneNumeric(changesOpc: DataFrame): DataFrame =
-    changesOpc
-      .withColumn("end_block", lead(col("block_num"), 1).over(byUid))
-      .withColumn("next_opc", lead(col("opc"), 1).over(byUid))
-      .filter(col("opc") =!= DeleteOpc && col("next_opc") === DeleteOpc)
-      .select(col("uid").cast("string").as("id"),
-        col("block_num").as("start_block"), col("end_block"), col("value"))
-
-  /** [[asofLookup]] served numeric — same output schema/rows. */
-  def asofLookupNumeric(changesOpc: DataFrame, atBlock: Long): DataFrame =
-    scd2VersionsNumericState(changesOpc)
-      .filter(col("start_block") <= atBlock &&
-        (col("end_block").isNull || col("end_block") > atBlock))
-      .select(col("uid").cast("string").as("id"), col("start_block"), col("value"))
+      .select(col("id"), col("start_block"), col("value")))
 }

@@ -40,54 +40,54 @@ object GraphLoad {
 
   // ---- queries -------------------------------------------------------
 
-  // the SCD2/squash serving family runs over the ALL-NUMERIC change
-  // stream (round 12): exchange/sort keys are the raw 8-byte uid and
-  // the op an int opcode, the string id emitted post-shuffle — see
-  // EntityVersioner's numeric-twin block; results identical
-  // (VersionerNumericSpec + oracle both gate it)
-  private def chOpc(s: SparkSession, d: String): DataFrame =
-    EntityChanges.changesOpcode(s, d)
+  // the SCD2/squash serving family runs over the numeric-key change
+  // stream: exchange/sort keys are the raw 8-byte entity key and the op
+  // a boolean, the string id emitted post-shuffle (EntityVersioner);
+  // results identical (VersionerNumericSpec + oracle both gate it)
+  private def chNum(s: SparkSession, d: String): DataFrame =
+    EntityChanges.changesNumericKey(s, d)
 
   def glScd2Versions(s: SparkSession, d: String): DataFrame =
-    EntityVersioner.scd2VersionsNumeric(chOpc(s, d))
+    EntityVersioner.scd2Versions(chNum(s, d))
 
   // standing-state memos: the prior version store / squash state are
   // what a production deployment keeps ON DISK between ingests — each
   // call pays only the batch merge, the dd_cluster_incremental
-  // convention (oracle unchanged: the FULL recompute)
+  // convention (oracle unchanged: the FULL recompute). Stamped with
+  // events.parquet's mtime, so a rewritten stream rebuilds the state
+  // instead of merging a new batch into a stale prior; a replaced or
+  // invalidated state is unpersisted, not left pinned in the cache.
+  private def unpersist(df: DataFrame): Unit = df.unpersist(blocking = false)
   private val scd2PriorMemo =
-    graft.SessionMemo.named[DataFrame]("gl_scd2_prior")
+    graft.SessionMemo.named[DataFrame]("gl_scd2_prior", unpersist)
   private val squashPriorMemo =
-    graft.SessionMemo.named[DataFrame]("gl_squash_prior")
+    graft.SessionMemo.named[DataFrame]("gl_squash_prior", unpersist)
 
-  def glScd2Incremental(s: SparkSession, d: String): DataFrame = {
-    val prior = scd2PriorMemo.getOrBuild(s, d) {
-      EntityVersioner.scd2VersionsNumericState(
-          chOpc(s, d).filter(col("block_num") < AsofBlock))
+  private def priorState(memo: graft.SessionMemo[DataFrame], s: SparkSession, d: String)(
+      state: DataFrame => DataFrame): DataFrame =
+    memo.getOrBuild(s, d, Tables.mtime(d, "events")) {
+      state(chNum(s, d).filter(col("block_num") < AsofBlock))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    EntityVersioner.scd2IncrementalFromNumeric(prior,
-      chOpc(s, d).filter(col("block_num") >= AsofBlock))
-  }
+
+  def glScd2Incremental(s: SparkSession, d: String): DataFrame =
+    EntityVersioner.scd2IncrementalFrom(
+      priorState(scd2PriorMemo, s, d)(EntityVersioner.scd2State),
+      chNum(s, d).filter(col("block_num") >= AsofBlock))
 
   def glSquashLatest(s: SparkSession, d: String): DataFrame =
-    EntityVersioner.squashLatestNumeric(chOpc(s, d))
+    EntityVersioner.squashLatest(chNum(s, d))
 
-  def glSquashIncremental(s: SparkSession, d: String): DataFrame = {
-    val prior = squashPriorMemo.getOrBuild(s, d) {
-      EntityVersioner.squashLatestNumericState(
-          chOpc(s, d).filter(col("block_num") < AsofBlock))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    EntityVersioner.squashIncrementalFromNumeric(prior,
-      chOpc(s, d).filter(col("block_num") >= AsofBlock))
-  }
+  def glSquashIncremental(s: SparkSession, d: String): DataFrame =
+    EntityVersioner.squashIncrementalFrom(
+      priorState(squashPriorMemo, s, d)(EntityVersioner.squashState),
+      chNum(s, d).filter(col("block_num") >= AsofBlock))
 
   def glImmutableBlock(s: SparkSession, d: String): DataFrame =
     EntityVersioner.immutableBlock(ch(s, d))
 
   def glDeleteTombstone(s: SparkSession, d: String): DataFrame =
-    EntityVersioner.deleteTombstoneNumeric(chOpc(s, d))
+    EntityVersioner.deleteTombstone(chNum(s, d))
 
   def glBundleAssign(s: SparkSession, d: String): DataFrame =
     Bundler.bundleAssign(ch(s, d), BundleSize)
@@ -96,7 +96,7 @@ object GraphLoad {
     VidAssigner.assignVids(s, ch(s, d), BundleSize)
 
   def glBlockRangeText(s: SparkSession, d: String): DataFrame = {
-    val v = EntityVersioner.scd2VersionsNumeric(chOpc(s, d))
+    val v = EntityVersioner.scd2Versions(chNum(s, d))
     v.select(col("id"), col("start_block"),
       GraphCsv.blockRangeText(col("start_block"), col("end_block")).as("block_range"))
   }
@@ -184,12 +184,12 @@ object GraphLoad {
 
   // distinct-count over the NUMERIC entity key (bijective with the
   // string id — same count, the output never surfaces ids): the
-  // two-phase distinct shuffles (op, uid) as longs, not strings.
+  // two-phase distinct shuffles (op, id) with a long id, not a string.
   // Measured sf1 min-of-5: 0.56 → 0.51 s (the remainder is the scan +
   // the distinct's two exchanges — stage-floor-bound at this SF).
   def glEntityStats(s: SparkSession, d: String): DataFrame =
-    EntityChanges.changesNumericKey(s, d).groupBy(col("op"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("uid")).as("n_ids"),
+    chNum(s, d).groupBy(col("op"))
+      .agg(count(lit(1)).as("n"), countDistinct(col("id")).as("n_ids"),
         max(col("block_num")).as("last_block"))
 
   def glLastBlock(s: SparkSession, d: String): DataFrame =
@@ -197,7 +197,7 @@ object GraphLoad {
       .withColumn("block_hash", md5(col("last_block").cast("string")))
 
   def glAsofLookup(s: SparkSession, d: String): DataFrame =
-    EntityVersioner.asofLookupNumeric(chOpc(s, d), AsofBlock)
+    EntityVersioner.asofLookup(chNum(s, d), AsofBlock)
 
   def glRangeContiguity(s: SparkSession, d: String): DataFrame =
     Bundler.rangeContiguity(ch(s, d), BundleSize)
@@ -296,12 +296,12 @@ object GraphLoad {
     * with the string id, and the output never surfaces the id), so the
     * exchange+sort move 8-byte words instead of strings: 0.74 s. */
   def glChangeValidation(s: SparkSession, d: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("uid").orderBy("block_num")
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("id").orderBy("block_num")
     // round 11: served from the standing user-bucketed events layout —
     // the per-entity window's EXCHANGE elides (the projection's alias
-    // keeps the scan's hashpartitioning(user_id) visible as uid); the
+    // keeps the scan's hashpartitioning(user_id) visible as id); the
     // per-partition sort stays, because the layout's (user_id, ts,
-    // event_id) order doesn't imply (uid, block_num) and the engine
+    // event_id) order doesn't imply (id, block_num) and the engine
     // may not assume ts is monotone in event_id
     EntityChanges.changesNumericKeyFrom(
       Analytics.sortedScanSession(s).table(Analytics.bucketedEvents(s, d)))

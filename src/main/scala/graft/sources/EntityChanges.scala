@@ -36,66 +36,31 @@ object EntityChanges {
     )
   }
 
-  /** [[changes]] keyed by the RAW numeric entity key (`uid`), for
-    * consumers whose OUTPUT never surfaces the id (anomaly counts,
-    * stream-level stats): `uid` is bijective with `id` (the string is
-    * its cast), so per-entity windows/groups partition identically —
-    * but the exchange and sort move 8-byte words instead of strings.
-    * Measured on gl_change_validation at sf1 (min of 4, loaded host):
-    * string-id window 0.81 s → numeric 0.74 s. Consumers that emit
-    * the id must use [[changes]] — the string form IS the reference's
-    * entity key. */
+  /** [[changes]] keyed by the RAW numeric entity key: `id` is the
+    * events' `user_id` as a bigint, bijective with [[changes]]'s string
+    * id (the string is its cast), so per-entity windows/groups partition
+    * identically — but the exchange and sort move 8-byte words instead
+    * of strings. No `props`. The served SCD2/squash keys run on it and
+    * cast the id to the reference's string AFTER their exchange
+    * ([[graft.operators.EntityVersioner]]); consumers whose output
+    * never surfaces the id (anomaly counts, stream-level stats) use it
+    * as is. Measured on gl_change_validation at sf1 (min of 4, loaded
+    * host): string-id window 0.81 s → numeric 0.74 s. */
   def changesNumericKey(spark: SparkSession, dir: String): DataFrame =
     changesNumericKeyFrom(Tables.events(spark, dir))
 
   /** [[changesNumericKey]] over an explicit events frame — the hook
     * that lets per-entity window consumers substitute the standing
     * user-bucketed layout (a plain projection preserves the scan's
-    * reported partitioning through the `user_id`→`uid` alias, so the
+    * reported partitioning through the `user_id`→`id` alias, so the
     * entity window's exchange elides). */
   def changesNumericKeyFrom(events: DataFrame): DataFrame =
     events.select(
-      col("user_id").as("uid"),
+      col("user_id").as("id"),
       col("event_id").as("block_num"),
       when(col("event_type") === "signup", "CREATE")
         .when(col("event_type") === "error", "DELETE")
         .otherwise("UPDATE").as("op"),
-      col("value")
-    )
-
-  /** Operation opcodes for the all-numeric change stream
-    * ([[changesOpcode]]): CASE arms ordered like [[changes]]'s. The
-    * codes exist so per-entity aggregates/windows can keep every
-    * grouping key AND aggregation-buffer column fixed-width (a string
-    * in a DeclarativeAggregate buffer demotes the whole aggregation to
-    * SortAggregate — the map side then sorts the corpus by the string
-    * id instead of hash-combining; measured on gl_squash_latest,
-    * round 12). Consumers that surface the op reattach the string on
-    * the post-aggregate rows. */
-  val CreateOpc = 0
-  val DeleteOpc = 1
-  val UpdateOpc = 2
-
-  /** [[changes]] in ALL-NUMERIC form — raw `uid` key (bijective with
-    * the string id: the id IS `CAST(uid AS STRING)`, so per-entity
-    * groups/windows partition identically) and the op as an int opcode.
-    * Exchanges and sort keys move 8-byte words; the serving query
-    * casts `uid` to the reference's string id AFTER its per-entity
-    * exchange, paying |output| casts instead of |corpus| string
-    * hashes/compares. Consumers whose output surfaces `op` or `props`
-    * must use [[changes]]. */
-  def changesOpcode(spark: SparkSession, dir: String): DataFrame =
-    changesOpcodeFrom(Tables.events(spark, dir))
-
-  /** [[changesOpcode]] over an explicit events frame (the standing-
-    * layout substitution hook, like [[changesNumericKeyFrom]]). */
-  def changesOpcodeFrom(events: DataFrame): DataFrame =
-    events.select(
-      col("user_id").as("uid"),
-      col("event_id").as("block_num"),
-      when(col("event_type") === "signup", CreateOpc)
-        .when(col("event_type") === "error", DeleteOpc)
-        .otherwise(UpdateOpc).as("opc"),
       col("value")
     )
 

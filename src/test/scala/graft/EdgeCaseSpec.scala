@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{AsofJoin, EntityVersioner, UndoCanonicalizer}
 import graft.queries.Dedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Degenerate-input behavior of the core operators: empty frames,
@@ -17,35 +18,46 @@ class EdgeCaseSpec extends SparkSpec {
   private def changes(rows: (String, Long, String, Double)*) =
     rows.toDF(changeCols: _*)
 
+  /** The same change rows under both key types the versioner reads: a
+    * bigint id, and the string id that is its cast. */
+  private def keyed(rows: (Long, Long, String, Double)*): Seq[DataFrame] = {
+    val numeric = rows.toDF(changeCols: _*)
+    Seq(numeric.withColumn("id", col("id").cast("string")), numeric)
+  }
+
   test("scd2 on an empty change stream is empty, not an error") {
-    val empty = changes()
-    assert(EntityVersioner.scd2Versions(empty).count() === 0)
-    assert(EntityVersioner.squashLatest(empty).count() === 0)
-    assert(EntityVersioner.deleteTombstone(empty).count() === 0)
+    keyed().foreach { empty =>
+      assert(EntityVersioner.scd2Versions(empty).count() === 0)
+      assert(EntityVersioner.squashLatest(empty).count() === 0)
+      assert(EntityVersioner.deleteTombstone(empty).count() === 0)
+    }
   }
 
   test("a single CREATE yields one open version and survives the squash") {
-    val one = changes(("a", 5L, "CREATE", 1.0))
-    val v = EntityVersioner.scd2Versions(one).collect()
-    assert(v.length === 1)
-    assert(v.head.getAs[Any]("end_block") == null)
-    assert(EntityVersioner.squashLatest(one).count() === 1)
+    keyed((1L, 5L, "CREATE", 1.0)).foreach { one =>
+      val v = EntityVersioner.scd2Versions(one).collect()
+      assert(v.length === 1)
+      assert(v.head.getAs[Any]("end_block") == null)
+      assert(EntityVersioner.squashLatest(one).count() === 1)
+    }
   }
 
   test("an id whose last change is DELETE leaves history but no live state") {
-    val cs = changes(("a", 1L, "CREATE", 1.0), ("a", 2L, "DELETE", 0.0))
-    val hist = EntityVersioner.scd2Versions(cs).collect()
-    assert(hist.length === 1 && hist.head.getAs[Long]("end_block") === 2L)
-    assert(EntityVersioner.squashLatest(cs).count() === 0)
-    val tomb = EntityVersioner.deleteTombstone(cs).collect()
-    assert(tomb.length === 1 && tomb.head.getAs[String]("id") === "a")
+    keyed((1L, 1L, "CREATE", 1.0), (1L, 2L, "DELETE", 0.0)).foreach { cs =>
+      val hist = EntityVersioner.scd2Versions(cs).collect()
+      assert(hist.length === 1 && hist.head.getAs[Long]("end_block") === 2L)
+      assert(EntityVersioner.squashLatest(cs).count() === 0)
+      val tomb = EntityVersioner.deleteTombstone(cs).collect()
+      assert(tomb.length === 1 && tomb.head.getAs[String]("id") === "1")
+    }
   }
 
   test("DELETE for an id never seen emits nothing anywhere") {
-    val cs = changes(("ghost", 7L, "DELETE", 0.0))
-    assert(EntityVersioner.scd2Versions(cs).count() === 0)
-    assert(EntityVersioner.squashLatest(cs).count() === 0)
-    assert(EntityVersioner.deleteTombstone(cs).count() === 0)
+    keyed((7L, 7L, "DELETE", 0.0)).foreach { cs =>
+      assert(EntityVersioner.scd2Versions(cs).count() === 0)
+      assert(EntityVersioner.squashLatest(cs).count() === 0)
+      assert(EntityVersioner.deleteTombstone(cs).count() === 0)
+    }
   }
 
   test("undo canonicalization with no undo signals is the identity") {

@@ -83,7 +83,9 @@ class GraphLoadSpec extends SparkSpec {
         Option(r.get(r.fieldIndex("end_block"))), r.getAs[Double]("value"))).toSet
     val full = norm(EntityVersioner.scd2Versions(changes))
     Seq(1L, 250L, 500L, 999L).foreach { split =>
-      assert(norm(EntityVersioner.scd2Incremental(changes, split)) === full,
+      val prior = EntityVersioner.scd2State(changes.filter(col("block_num") < split))
+      val batch = changes.filter(col("block_num") >= split)
+      assert(norm(EntityVersioner.scd2IncrementalFrom(prior, batch)) === full,
         s"incremental != full at split=$split")
     }
   }

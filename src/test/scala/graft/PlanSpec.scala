@@ -138,8 +138,8 @@ class PlanSpec extends SparkSpec {
   test("gl_change_validation: served from bucketed events — entity window exchange elides") {
     val p = physical(GraphLoad.glChangeValidation(spark, sf))
     assert(p.contains("b_events_"), p)
-    // the uid alias keeps the scan's hashpartitioning(user_id) visible,
-    // so the per-entity window needs no exchange; its (uid, block_num)
+    // the id alias keeps the scan's hashpartitioning(user_id) visible,
+    // so the per-entity window needs no exchange; its (id, block_num)
     // sort stays local (the layout's ts order doesn't imply block_num
     // order); the only exchange moves ≤|anomaly classes| agg rows
     assert(shuffles(p) === 1, p)
@@ -149,8 +149,8 @@ class PlanSpec extends SparkSpec {
 
   test("gl_squash_latest: max_by is a two-phase HashAggregate, not a window") {
     val p = physical(GraphLoad.glSquashLatest(spark, sf))
-    // round 12: the serve aggregates the ALL-NUMERIC change stream
-    // (uid key + int opcode), so every buffer column is fixed-width and
+    // the serve aggregates the numeric-key change stream with the op
+    // folded to a boolean, so every buffer column is fixed-width and
     // the agg stays a HashAggregate with genuine map-side partials — a
     // SortAggregate here means a string crept back into the buffer and
     // the map side is sorting the corpus again

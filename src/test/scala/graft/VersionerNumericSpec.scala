@@ -3,75 +3,72 @@ package graft
 import graft.operators.EntityVersioner
 import graft.sources.EntityChanges
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
-/** Pins the round-12 all-numeric SCD2/squash serving twins equal to the
-  * string-keyed originals on the corpus: the uid key is bijective with
-  * the string id (the id IS its cast) and the opcode with the op
-  * string, so every pair must produce the identical row set. The
-  * numeric forms exist purely for plan shape (HashAggregate instead of
-  * SortAggregate, long sort keys instead of UTF8String) — any
-  * divergence here is a correctness bug, not a tuning regression. */
+/** Pins every [[EntityVersioner]] operator to the same answer on both
+  * change readers: [[EntityChanges.changesNumericKey]] (the served
+  * stream — a bigint id) and [[EntityChanges.changes]] (the string id,
+  * which IS the bigint's cast). The key type exists purely for plan
+  * shape (8-byte exchange and sort keys), so any divergence here is a
+  * correctness bug, not a tuning regression. Both readers must also
+  * keep the squash a HashAggregate. (Case names predate the single
+  * operator set, when the numeric reader had operators of its own.) */
 class VersionerNumericSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
   private def changes = EntityChanges.changes(spark, sf)
-  private def changesOpc = EntityChanges.changesOpcode(spark, sf)
+  private def changesNum = EntityChanges.changesNumericKey(spark, sf)
+
+  /** `op` over the numeric reader == `op` over the string reader. */
+  private def sameRows(op: DataFrame => DataFrame): Unit =
+    assert(rows(op(changesNum)) === rows(op(changes)))
 
   test("schemas match the string-keyed originals exactly") {
-    assert(EntityVersioner.scd2VersionsNumeric(changesOpc).schema ===
-      EntityVersioner.scd2Versions(changes).schema)
-    assert(EntityVersioner.squashLatestNumeric(changesOpc).schema ===
-      EntityVersioner.squashLatest(changes).schema)
-    assert(EntityVersioner.deleteTombstoneNumeric(changesOpc).schema ===
-      EntityVersioner.deleteTombstone(changes).schema)
-    assert(EntityVersioner.asofLookupNumeric(changesOpc, 500L).schema ===
-      EntityVersioner.asofLookup(changes, 500L).schema)
+    Seq[DataFrame => DataFrame](
+      EntityVersioner.scd2Versions, EntityVersioner.squashLatest,
+      EntityVersioner.deleteTombstone, EntityVersioner.asofLookup(_, 500L)
+    ).foreach(op => assert(op(changesNum).schema === op(changes).schema))
   }
 
   test("scd2VersionsNumeric == scd2Versions on the corpus") {
-    assert(rows(EntityVersioner.scd2VersionsNumeric(changesOpc)) ===
-      rows(EntityVersioner.scd2Versions(changes)))
+    sameRows(EntityVersioner.scd2Versions)
   }
 
   test("squashLatestNumeric == squashLatest on the corpus") {
-    assert(rows(EntityVersioner.squashLatestNumeric(changesOpc)) ===
-      rows(EntityVersioner.squashLatest(changes)))
+    sameRows(EntityVersioner.squashLatest)
   }
 
   test("deleteTombstoneNumeric == deleteTombstone on the corpus") {
-    assert(rows(EntityVersioner.deleteTombstoneNumeric(changesOpc)) ===
-      rows(EntityVersioner.deleteTombstone(changes)))
+    sameRows(EntityVersioner.deleteTombstone)
   }
 
   test("asofLookupNumeric == asofLookup on the corpus") {
-    assert(rows(EntityVersioner.asofLookupNumeric(changesOpc, 500L)) ===
-      rows(EntityVersioner.asofLookup(changes, 500L)))
+    sameRows(EntityVersioner.asofLookup(_, 500L))
   }
 
   test("numeric incremental merges equal the full recompute at any split") {
-    import org.apache.spark.sql.functions.col
     val fullV = rows(EntityVersioner.scd2Versions(changes))
     val fullS = rows(EntityVersioner.squashLatest(changes))
-    Seq(1L, 250L, 500L, 999L).foreach { split =>
-      val priorV = EntityVersioner.scd2VersionsNumericState(
-        changesOpc.filter(col("block_num") < split))
-      val gotV = rows(EntityVersioner.scd2IncrementalFromNumeric(
-        priorV, changesOpc.filter(col("block_num") >= split)))
-      assert(gotV === fullV, s"scd2 incremental != full at split=$split")
-      val priorS = EntityVersioner.squashLatestNumericState(
-        changesOpc.filter(col("block_num") < split))
-      val gotS = rows(EntityVersioner.squashIncrementalFromNumeric(
-        priorS, changesOpc.filter(col("block_num") >= split)))
-      assert(gotS === fullS, s"squash incremental != full at split=$split")
+    for (split <- Seq(1L, 250L, 500L, 999L);
+         (name, c) <- Seq("numeric" -> changesNum, "string" -> changes)) {
+      val prefix = c.filter(col("block_num") < split)
+      val batch = c.filter(col("block_num") >= split)
+      val gotV = rows(EntityVersioner.scd2IncrementalFrom(EntityVersioner.scd2State(prefix), batch))
+      assert(gotV === fullV, s"$name scd2 incremental != full at split=$split")
+      val gotS = rows(EntityVersioner.squashIncrementalFrom(EntityVersioner.squashState(prefix), batch))
+      assert(gotS === fullS, s"$name squash incremental != full at split=$split")
     }
   }
 
   test("squashLatestNumeric plans as a two-phase HashAggregate (no corpus sort)") {
-    val p = EntityVersioner.squashLatestNumeric(changesOpc)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("HashAggregate"), p)
-    assert(!p.contains("SortAggregate"), p)
+    // the op travels as a boolean, so the buffer is fixed-width whatever
+    // the id's type — the string-keyed squash aggregates by hash too
+    Seq(changesNum, changes).foreach { c =>
+      val p = EntityVersioner.squashLatest(c).queryExecution.executedPlan.toString
+      assert(p.contains("HashAggregate"), p)
+      assert(!p.contains("SortAggregate"), p)
+    }
   }
 }
