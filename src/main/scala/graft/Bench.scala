@@ -313,7 +313,7 @@ object Bench {
     // round's BENCH json records both engines' totals and the
     // shared-key ratio either way. Shared keys only — a query one
     // engine didn't run contributes to neither total.
-    val duckJson = {
+    val (duckCompact, duckPerKey) = {
       val path = sys.env.getOrElse("SPARK_GRAFT_DUCK_JSON", "DUCK_TIMING.json")
       val f = new java.io.File(path)
       val fromFile = if (!f.exists()) None else {
@@ -331,7 +331,7 @@ object Bench {
       val parsed: Option[(Map[String, Double], String)] =
         if (duckInterleaved.nonEmpty) Some((duckInterleaved, "interleaved"))
         else fromFile.map((_, "file"))
-      parsed.fold(("", "")) { case (duck, protocol) =>
+      parsed.fold((Seq.empty[(String, String)], Seq.empty[(String, String)])) { case (duck, protocol) =>
         val shared = results.collect {
           case (n, Right(v)) if duck.contains(n) => (n, v, duck(n))
         }
@@ -364,26 +364,51 @@ object Bench {
         val slowLimited = duckSamples.toSeq
           .filter(_._2.min > duckSlowSkip).map(_._1).sorted
           .map("\"" + _ + "\"").mkString("[", ",", "]")
-        (f""","duck_total_sec_shared":$duckShared%.3f,"spark_total_sec_shared":$sparkShared%.3f,"ratio_shared":${sparkShared / math.max(duckShared, 1e-9)}%.3f,"spark_floor_adj_sec_shared":$adjShared%.3f,"ratio_shared_floor_adj":${adjShared / math.max(duckShared, 1e-9)}%.3f,"shared_keys":${shared.size},"duck_protocol":"$protocol"""",
-          s""","ratio_per_key":$perKey,"duck_queries":$duckPerKey,"duck_slow_limited":$slowLimited""")
+        (Seq("duck_total_sec_shared" -> f"$duckShared%.3f", "spark_total_sec_shared" -> f"$sparkShared%.3f",
+          "ratio_shared" -> f"${sparkShared / math.max(duckShared, 1e-9)}%.3f",
+          "spark_floor_adj_sec_shared" -> f"$adjShared%.3f",
+          "ratio_shared_floor_adj" -> f"${adjShared / math.max(duckShared, 1e-9)}%.3f",
+          "shared_keys" -> s"${shared.size}", "duck_protocol" -> s""""$protocol""""),
+          Seq("ratio_per_key" -> perKey, "duck_queries" -> duckPerKey, "duck_slow_limited" -> slowLimited))
       }
     }
-    val (duckCompact, duckPerKey) = duckJson
     // host-load context: the r6 bench spread (2.44-3.24x raw on the
     // same tree) was ambient load; recording the 1-minute loadavg at
     // start and end makes every sample self-describing
     val loadEnd = loadAvg()
-    val loadJson = f""","load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f"""
     val demoJson = demonstrators.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","errors":$errs,"floor_per_query_sec":$floor,"wave_floor_sec":$waveFloor,"floor_total_sec":$floorTotal,"data_proportional_sec":$dataProp,"queries":$qs,"stages":$stagesJson,"shuffle_write_mb":$shufJson,"census_incomplete":$dirtyJson,"demonstrators":$demoJson$duckCompact$duckPerKey$loadJson,"sf":"$sfDir"}"""
+    val detailPath =
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
+    val qsShort = results.map {
+      case (k, Right(v)) => f""""$k":$v%.3f"""
+      case (k, Left(e)) =>
+        "\"" + k + "\":\"ERROR " + e.replaceAll("[\"\\\\\n]", " ").take(60) + "\""
+    }.mkString("{", ",", "}")
+    // the run's one record: (key, full-line value, summary value), None
+    // where a line omits the key; the compact trailer is the summary
+    // without `queries`
+    val both = (v: String) => (Some(v), Some(v))
+    val record: Seq[(String, (Option[String], Option[String]))] = Seq(
+      "metric" -> (Some("\"total\""), Some("\"summary\"")), "value" -> (Some(s"$total"), Some(f"$total%.3f")),
+      "unit" -> both("\"sec\""), "n_queries" -> (None, Some(s"${ok.size}")), "errors" -> both(s"$errs"),
+      "queries" -> (None, Some(qsShort)), "floor_per_query_sec" -> (Some(s"$floor"), Some(f"$floor%.4f")),
+      "wave_floor_sec" -> (Some(s"$waveFloor"), None), "floor_total_sec" -> (Some(s"$floorTotal"), None),
+      "data_proportional_sec" -> (Some(s"$dataProp"), Some(f"$dataProp%.3f")), "queries" -> (Some(qs), None),
+      "stages" -> (Some(stagesJson), None), "shuffle_write_mb" -> (Some(shufJson), None),
+      "census_incomplete" -> (Some(dirtyJson), None), "demonstrators" -> (Some(demoJson), None)) ++
+      duckCompact.map { case (k, v) => k -> both(v) } ++ duckPerKey.map { case (k, v) => k -> (Some(v), None) } ++
+      Seq("load_avg_start" -> both(f"$loadStart%.2f"), "load_avg_end" -> both(f"$loadEnd%.2f"),
+        "detail_file" -> (None, Some(s""""$detailPath"""")), "sf" -> both(s""""$sfDir""""))
+    def render(fields: Seq[(String, Option[String])]): String =
+      fields.collect { case (k, Some(v)) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val fullLine = render(record.map { case (k, (full, _)) => k -> full })
+    val summary = record.map { case (k, (_, short)) => k -> short }
     println(fullLine)
     // the driver records only the TAIL of stdout (≈2 KB), which
     // truncated everything before ratio_per_key in round 5 — so the
     // COMPLETE json (per-key walls, stages, shuffle, floor
     // decomposition, duck ratios) is also written to a committed
     // file the judge can always read in full
-    val detailPath =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailPath), fullLine + "\n")
     catch { case e: Exception =>
@@ -398,19 +423,14 @@ object Bench {
     // only the 2 KB tail still finds the intact compact trailer below,
     // exactly as in every prior round. Additions-only: every compact-
     // trailer field is repeated here, values truncated to 3 decimals.
-    val qsShort = results.map {
-      case (k, Right(v)) => f""""$k":$v%.3f"""
-      case (k, Left(e)) =>
-        "\"" + k + "\":\"ERROR " + e.replaceAll("[\"\\\\\n]", " ").take(60) + "\""
-    }.mkString("{", ",", "}")
-    println(f"""{"metric":"summary","value":$total%.3f,"unit":"sec","n_queries":${ok.size},"errors":$errs,"queries":$qsShort,"floor_per_query_sec":$floor%.4f,"data_proportional_sec":$dataProp%.3f$duckCompact$loadJson,"detail_file":"$detailPath","sf":"$sfDir"}""")
+    println(render(summary))
     // compact trailer: the headline numbers must also appear at the
     // very end of stdout or they are truncated away with the front of
     // the long line above
     // COMPACT by construction (no per-key maps): the driver keeps only
     // the trailing ~2KB of stdout, and rounds 5-6 lost the parsed
     // summary because ratio_per_key pushed the line past that window
-    println(f"""{"metric":"summary","value":$total%.3f,"unit":"sec","n_queries":${ok.size},"errors":$errs,"floor_per_query_sec":$floor%.4f,"data_proportional_sec":$dataProp%.3f$duckCompact$loadJson,"detail_file":"$detailPath","sf":"$sfDir"}""")
+    println(render(summary.filterNot(_._1 == "queries")))
     if (errs > 0) { spark.stop(); sys.exit(1) }
     spark.stop()
   }

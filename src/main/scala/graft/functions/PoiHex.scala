@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.operators.PoiStableHash
 import graft.stablehash.StableHash
 import graft.stablehash.StableHash.U192
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,26 +13,26 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Final POI readoff for the distributed stablehash chain
   * ([[graft.operators.PoiStableHash.poiChain]]): given a block's
-  * in-bundle prefix mixer `(v0, v1, v2, cnt)`, its bundle's chain
-  * offset `(ov0, ov1, ov2, ocnt)`, and `has_off` (0 for the first
-  * bundle, whose offset legs are zeros), emit
+  * in-bundle prefix mixer `(v0, v1, v2, cnt)` and its bundle's chain
+  * offset `(ov0, ov1, ov2, ocnt)` — `(MixInit, 0)`, the fold's
+  * identity, for the first bundle — emit
   * `hex(FastHasher.from(mix(offset, prefix), ocnt + cnt).toBytes)` —
   * exactly the Dataset.map closure it replaces, as a codegen'd
   * expression so the serve stays inside Tungsten rows (the typed map
   * paid a full InternalRow → case-class → InternalRow serde per block
   * row per pass; round 12, guide §1.2 per-task work). Bit-compat is
   * gated by the same PoiStableHashSparkSpec sequential-chain pin as
-  * before. All nine legs are non-nullable longs by construction (the
+  * before. All eight legs are non-nullable longs by construction (the
   * serve inner-joins a COMPLETE per-bundle offset table). Registered
   * as `graft_poi_hex`. */
 case class PoiHex(children: Seq[Expression]) extends Expression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (children.size != 9)
+    if (children.size != 8)
       TypeCheckResult.TypeCheckFailure(
-        "graft_poi_hex expects (v0, v1, v2, cnt, ov0, ov1, ov2, ocnt, has_off)")
+        "graft_poi_hex expects (v0, v1, v2, cnt, ov0, ov1, ov2, ocnt)")
     else if (!children.forall(_.dataType == LongType))
-      TypeCheckResult.TypeCheckFailure("graft_poi_hex expects 9 longs")
+      TypeCheckResult.TypeCheckFailure("graft_poi_hex expects 8 longs")
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = StringType
@@ -40,7 +41,7 @@ case class PoiHex(children: Seq[Expression]) extends Expression {
 
   override def eval(input: InternalRow): Any = {
     val v = children.map(_.eval(input).asInstanceOf[Long])
-    PoiHex.compute(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7), v(8))
+    PoiHex.compute(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -62,24 +63,8 @@ case class PoiHex(children: Seq[Expression]) extends Expression {
 }
 
 object PoiHex {
-  private val HexChars = "0123456789abcdef".toCharArray
-
   def compute(v0: Long, v1: Long, v2: Long, cnt: Long,
-              ov0: Long, ov1: Long, ov2: Long, ocnt: Long,
-              hasOff: Long): UTF8String = {
-    val local = U192(v0, v1, v2)
-    val (m, c) =
-      if (hasOff == 0L) (local, cnt)
-      else (StableHash.mix(U192(ov0, ov1, ov2), local), ocnt + cnt)
-    val bytes = StableHash.FastHasher.from(m, c).toBytes
-    val out = new Array[Byte](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i) & 0xff
-      out(i * 2) = HexChars(b >>> 4).toByte
-      out(i * 2 + 1) = HexChars(b & 0xf).toByte
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
+              ov0: Long, ov1: Long, ov2: Long, ocnt: Long): UTF8String =
+    UTF8String.fromBytes(PoiStableHash.hexAscii(StableHash.FastHasher.from(
+      StableHash.mix(U192(ov0, ov1, ov2), U192(v0, v1, v2)), ocnt + cnt).toBytes))
 }

@@ -28,8 +28,9 @@ final case class PoiPrefixRow(block_num: Long, bundle: Long,
   *     (`Pause(prev)`) — poi/poi.go:48-73
   *
   * Spark-first realization: the FldMix fold is commutative AND
-  * associative ([[graft.stablehash.StableHash]]), so
-  *   poi(b) = local(1) ○ local(2) ○ … ○ local(b)
+  * associative, with `MixInit` as its identity
+  * ([[graft.stablehash.StableHash]]), so
+  *   poi(b) = MixInit ○ local(1) ○ local(2) ○ … ○ local(b)
   * where local(i) is block i's self-contained event fold. That turns
   * the reference's inherently sequential chain into
   *   1. one shuffle keyed by block: per-block local mixers in parallel
@@ -130,7 +131,34 @@ object PoiStableHash {
   }
 
   def hex(bytes: Array[Byte]): String =
-    bytes.map("%02x".format(_)).mkString
+    new String(hexAscii(bytes), java.nio.charset.StandardCharsets.US_ASCII)
+
+  private val HexChars = "0123456789abcdef".toCharArray
+
+  /** Lower-case hex of `bytes` as ASCII bytes — the one encoder behind
+    * [[hex]] and `graft_poi_hex`. */
+  def hexAscii(bytes: Array[Byte]): Array[Byte] = {
+    val out = new Array[Byte](bytes.length * 2)
+    var i = 0
+    while (i < bytes.length) {
+      val b = bytes(i) & 0xff
+      out(i * 2) = HexChars(b >>> 4).toByte
+      out(i * 2 + 1) = HexChars(b & 0xf).toByte
+      i += 1
+    }
+    out
+  }
+
+  /** One block's `user_state` events from its `(id, op, value)`
+    * changes, ordered by (id, op) — the deterministic stand-in for the
+    * reference's stream arrival order. A null value reads as "0", the
+    * [[valueText]] default, so batch and live build identical events. */
+  def blockEvents(changes: Seq[(String, String, String)]): Seq[PoiEvent] =
+    changes.sortBy(c => (c._1, c._2)).map { case (id, op, value) =>
+      if (op == "DELETE") RemoveEntity("user_state", id)
+      else SetEntity("user_state", id,
+        Seq("last_op" -> EString(op), "value" -> EBigDecimal(Option(value).getOrElse("0"))))
+    }
 
   // ---- Spark integration ------------------------------------------------
 
@@ -145,12 +173,18 @@ object PoiStableHash {
     coalesce(c.cast("decimal(20,2)").cast("string"), lit("0"))
 
   /** Chained per-block POIs for the standard entity-change stream:
-    * one SetEntity/RemoveEntity per change, entity type `user_state`,
-    * data = {value: BigDecimal, last_op: String}. Events within a block
-    * are ordered by (id, op) — the deterministic stand-in for the
-    * reference's stream arrival order. Output: (block_num, poi) rows.
+    * one [[blockEvents]] event per change, entity type `user_state`,
+    * data = {value: BigDecimal, last_op: String}. Output: (block_num,
+    * poi, chain_digest) rows.
     */
-  def poiChain(changes: DataFrame, bundleSize: Long): DataFrame = {
+  def poiChain(changes: DataFrame, bundleSize: Long): DataFrame =
+    chainTable(changes, bundleSize).frame
+
+  /** [[poiChain]]'s frame with the prefix frame it persists, so a
+    * standing owner can unpersist what the chain pins. */
+  private[graft] final case class ChainTable(frame: DataFrame, prefixes: Dataset[PoiPrefixRow])
+
+  private[graft] def chainTable(changes: DataFrame, bundleSize: Long): ChainTable = {
     val spark = changes.sparkSession
     import spark.implicits._
 
@@ -159,15 +193,11 @@ object PoiStableHash {
         valueText($"value").as[String])
       .groupByKey(_._1)
       .mapGroups { (bn, it) =>
-        val events = it.toSeq.sortBy(r => (r._2, r._3)).map { case (_, id, op, value) =>
-          if (op == "DELETE") RemoveEntity("user_state", id)
-          else SetEntity("user_state", id,
-            Seq("last_op" -> EString(op), "value" -> EBigDecimal(value)))
-        }
-        val h = blockLocal(bn, events)
+        val h = blockLocal(bn, blockEvents(it.map(r => (r._2, r._3, r._4)).toSeq))
         PoiLocalRow(bn, bn / bundleSize, h.mixer.v0, h.mixer.v1, h.mixer.v2, h.count)
       }
 
+    // each chain fold starts from (MixInit, 0), the fold's identity.
     // spill-safe persist: the bundle-totals collect below and the
     // returned dataframe both consume this stage — without it the
     // scan + both shuffles + all xxh3 hashing run TWICE per query
@@ -175,38 +205,27 @@ object PoiStableHash {
       .groupByKey(_.bundle)
       .flatMapGroups { (bundle, it) =>
         val rows = it.toSeq.sortBy(_.block_num)
-        var acc: Option[(U192, Long)] = None
+        var m = StableHash.MixInit
+        var c = 0L
         rows.zipWithIndex.map { case (r, i) =>
-          val local = U192(r.v0, r.v1, r.v2)
-          val next = acc match {
-            case Some((m, c)) => (StableHash.mix(m, local), c + r.cnt)
-            case None => (local, r.cnt)
-          }
-          acc = Some(next)
-          PoiPrefixRow(r.block_num, bundle, next._1.v0, next._1.v1, next._1.v2,
-            next._2, i == rows.length - 1)
+          m = StableHash.mix(m, U192(r.v0, r.v1, r.v2))
+          c += r.cnt
+          PoiPrefixRow(r.block_num, bundle, m.v0, m.v1, m.v2, c, i == rows.length - 1)
         }.iterator
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // bundle totals: |bundles| rows only (height / bundleSize — the
-    // same bounded driver set VidAssigner collects)
+    // same bounded driver set VidAssigner collects); a bundle's offset
+    // is the fold of every earlier bundle's total
     val totals = prefixes.filter(_.is_last).collect().sortBy(_.bundle)
-    val offsets: Map[Long, (U192, Long)] = {
-      var acc: Option[(U192, Long)] = None
-      totals.map { t =>
-        val off = t.bundle -> acc.orNull
-        acc = Some(acc match {
-          case Some((m, c)) => (StableHash.mix(m, U192(t.v0, t.v1, t.v2)), c + t.cnt)
-          case None => (U192(t.v0, t.v1, t.v2), t.cnt)
-        })
-        off
-      }.collect { case (b, o) if o != null => b -> o }.toMap
+    val offsets = totals.scanLeft((StableHash.MixInit, 0L)) { case ((m, c), t) =>
+      (StableHash.mix(m, U192(t.v0, t.v1, t.v2)), c + t.cnt)
     }
 
     // serve readoff as a codegen'd expression over the CACHED columnar
-    // prefix rows: the per-bundle offsets (|bundles| rows, zeros +
-    // has_off=0 where a bundle has no predecessor) broadcast-join in,
+    // prefix rows: the per-bundle offsets (|bundles| rows, (MixInit, 0)
+    // for the first bundle) broadcast-join in,
     // and `graft_poi_hex` computes mix+finalize+hex inside Tungsten —
     // the previous Dataset.map closure deserialized every prefix row
     // to a case class and re-serialized the result on EVERY pass of
@@ -215,19 +234,15 @@ object PoiStableHash {
     // (round 12, guide §1.2 per-task work). Same math, same
     // sequential-chain spec gate (PoiStableHashSparkSpec).
     graft.plans.GraftExtensions.ensureRegistered(spark)
-    val offsetRows = totals.map { t =>
-      offsets.get(t.bundle) match {
-        case Some((m, c)) => (t.bundle, m.v0, m.v1, m.v2, c, 1L)
-        case None => (t.bundle, 0L, 0L, 0L, 0L, 0L)
-      }
-    }.toSeq.toDF("bundle", "ov0", "ov1", "ov2", "ocnt", "has_off")
+    val offsetRows = totals.zip(offsets).map { case (t, (m, c)) =>
+      (t.bundle, m.v0, m.v1, m.v2, c)
+    }.toSeq.toDF("bundle", "ov0", "ov1", "ov2", "ocnt")
     val chain = prefixes.toDF()
       .join(broadcast(offsetRows), Seq("bundle"))
       .select(col("block_num"),
         call_function("graft_poi_hex",
           col("v0"), col("v1"), col("v2"), col("cnt"),
-          col("ov0"), col("ov1"), col("ov2"), col("ocnt"),
-          col("has_off")).as("poi"))
+          col("ov0"), col("ov1"), col("ov2"), col("ocnt")).as("poi"))
 
     // digest-of-digests: an order-free XOR set-digest over every
     // (block_num, poi) row, stamped onto each output row. The driver's
@@ -241,6 +256,6 @@ object PoiStableHash {
     // over the PERSISTED |blocks|-row mixer frame, never the data.
     val digest = chain.agg(
       bit_xor(xxhash64(col("block_num"), col("poi"))).as("chain_digest"))
-    chain.crossJoin(broadcast(digest))
+    ChainTable(chain.crossJoin(broadcast(digest)), prefixes)
   }
 }

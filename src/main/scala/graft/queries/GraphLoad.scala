@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{GraphCsv, Normalize}
-import graft.operators.{Bundler, EntityVersioner, Poi, UndoCanonicalizer, VidAssigner}
+import graft.operators.{Bundler, EntityVersioner, Poi, PoiStableHash, UndoCanonicalizer, VidAssigner}
 import graft.sources.EntityChanges
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -137,12 +137,15 @@ object GraphLoad {
   // memoized per (session, dir): poiChain persists its prefix stage and
   // typed-lambda plans never canonicalize equal across calls, so a
   // fresh build per invocation would leave one orphaned cache entry
-  // each time (session-lifetime; the memo pins exactly one)
-  private val poiChainMemo = graft.SessionMemo.named[DataFrame]("gl_poi_chain")
+  // each time (session-lifetime; the memo pins exactly one). Stamped
+  // with events.parquet's mtime, so a rewritten stream rebuilds the
+  // chain; a replaced or invalidated chain unpersists its prefixes.
+  private val poiChainMemo = graft.SessionMemo.named[PoiStableHash.ChainTable]("gl_poi_chain",
+    (t: PoiStableHash.ChainTable) => t.prefixes.unpersist(blocking = false): Unit)
 
   def glPoiStablehash(s: SparkSession, d: String): DataFrame =
-    poiChainMemo.getOrBuild(s, d)(
-      graft.operators.PoiStableHash.poiChain(ch(s, d), BundleSize))
+    poiChainMemo.getOrBuild(s, d, Tables.mtime(d, "events"))(
+      PoiStableHash.chainTable(ch(s, d), BundleSize)).frame
 
   def glSchemaNormalize(s: SparkSession, d: String): DataFrame = {
     val camel1 = concat(lit("user"), upper(substring(col("event_type"), 1, 1)),
@@ -170,11 +173,13 @@ object GraphLoad {
     * generalization, the streaming half is
     * [[graft.streaming.EntityChangeStream.closedVersionsWithUndo]]. */
   // memoized per (session, dir): construction collects the (tiny,
-  // reorg-bounded) undo list — one job that need not rerun per call
+  // reorg-bounded) undo list — one job that need not rerun per call;
+  // stamped with events.parquet's mtime, so a rewritten stream
+  // re-collects it
   private val undoCanonicalMemo = graft.SessionMemo.named[DataFrame]("gl_undo_canonical")
 
   def glUndoCanonical(s: SparkSession, d: String): DataFrame =
-    undoCanonicalMemo.getOrBuild(s, d) {
+    undoCanonicalMemo.getOrBuild(s, d, Tables.mtime(d, "events")) {
       val undos = Tables.events(s, d)
         .filter(col("event_type") === "error" && col("event_id") % 97 === 0)
         .select(col("event_id").as("useq"), (col("event_id") - 25).as("last_valid"))
@@ -417,7 +422,7 @@ object GraphLoad {
         .otherwise(slice(array(vStruct), 1, 0)).as("fields"))
   }
 
-  def glProtoParse(s: SparkSession, d: String): DataFrame = {
+  def glProtoParse(s: SparkSession, d: String): DataFrame =
     // MAP-ONLY since round 12: each change row round-trips through the
     // wire format as its own one-change EntityChanges message, inside
     // the scan's codegen span — the flattened field rows are identical
@@ -430,31 +435,25 @@ object GraphLoad {
     // reference's wire framing as the spec twin; ProtoSpec continues
     // to pin multi-change messages (arrays included) byte-for-byte at
     // the codec level.
-    graft.plans.GraftExtensions.ensureRegistered(s)
-    ch(s, d)
-      .select(col("block_num"),
-        call_function("graft_entity_changes_encode",
-          array(protoChangeStruct)).as("payload"))
-      .select(col("block_num"),
-        explode(call_function("graft_entity_changes", col("payload"))).as("c"))
-      .select(col("block_num"), col("c.entity").as("entity"), col("c.id").as("id"),
-        col("c.ordinal").as("ordinal"), col("c.op").as("op"),
-        explode(col("c.fields")).as("f"))
-      .select(col("block_num"), col("entity"), col("id"), col("ordinal"), col("op"),
-        col("f.name").as("field_name"), col("f.vtype").as("vtype"),
-        col("f.value").as("field_value"))
-  }
+    protoRoundTrip(s, d)(_.select(col("block_num"),
+      call_function("graft_entity_changes_encode", array(protoChangeStruct)).as("payload")))
 
   /** The block-framed form (one EntityChanges message per block — the
     * reference's wire unit): retained as the served key's equality
     * twin (ProtoParseFramingSpec pins both flattened outputs equal). */
-  private[graft] def glProtoParseBlockFramed(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(s)
-    ch(s, d)
-      .groupBy("block_num")
+  private[graft] def glProtoParseBlockFramed(s: SparkSession, d: String): DataFrame =
+    protoRoundTrip(s, d)(_.groupBy("block_num")
       .agg(collect_list(protoChangeStruct).as("changes"))
       .select(col("block_num"),
-        call_function("graft_entity_changes_encode", col("changes")).as("payload"))
+        call_function("graft_entity_changes_encode", col("changes")).as("payload")))
+
+  /** Encode the change stream into `(block_num, payload)` wire messages
+    * with `frame`, then decode and flatten them to one row per
+    * (change, field) — the tail both framings share. */
+  private def protoRoundTrip(s: SparkSession, d: String)(
+      frame: DataFrame => DataFrame): DataFrame = {
+    graft.plans.GraftExtensions.ensureRegistered(s)
+    frame(ch(s, d))
       .select(col("block_num"),
         explode(call_function("graft_entity_changes", col("payload"))).as("c"))
       .select(col("block_num"), col("c.entity").as("entity"), col("c.id").as("id"),

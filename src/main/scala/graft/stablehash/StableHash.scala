@@ -21,8 +21,11 @@ import java.math.BigInteger
   *
   * The FldMix fold is COMMUTATIVE AND ASSOCIATIVE (the constants satisfy
   * R·P + Q = Q² mod 2^192, making x○y = P+Q(x+y)+Rxy an affine image of
-  * multiplication), which is what lets Spark compute block POIs in
-  * parallel and fold prefixes — see [[graft.operators.PoiStableHash]].
+  * multiplication), and `MixInit` is its IDENTITY (Q + R·MixInit ≡ 1
+  * and P + Q·MixInit ≡ 0 mod 2^192, so x○MixInit = x). That is what
+  * lets Spark compute block POIs in parallel and fold prefixes from
+  * `(MixInit, 0)` with no first-block case — see
+  * [[graft.operators.PoiStableHash]].
   */
 object StableHash {
 
@@ -94,11 +97,12 @@ object StableHash {
   private val MixP = U192(0x2000000000000007L, 0x1FFFFFFFFFFFFFFEL, 0L)
   private val MixQ = U192(-7L, 0L, 0L) // 2^64 - 7
   private val MixR = U192(8L, 0L, 0L)
-  /** initial mixer state — fld.go FLDMIX_I. */
+  /** initial mixer state — fld.go FLDMIX_I; the identity of [[mix]]. */
   val MixInit: U192 = U192(0xE000000000000001L, -1L, -1L)
 
   /** the mix fold u(x,y) = P + Q·(x+y) + (R·x)·y — fld.go:98-105.
-    * Commutative and associative (see object doc). */
+    * Commutative and associative, with identity [[MixInit]] (see object
+    * doc). */
   def mix(x: U192, y: U192): U192 = MixP + (MixQ * (x + y)) + ((MixR * x) * y)
 
   /** fld.go Mix: fold a 128-bit value hash with its address-high seed. */

@@ -3,11 +3,10 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.operators.PoiStableHash
-import graft.operators.PoiStableHash.{EBigDecimal, EString, PoiEvent, RemoveEntity, SetEntity}
 import graft.stablehash.StableHash
 import graft.stablehash.StableHash.U192
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming graph-node-compatible proof of indexing (SURVEY.md §2
   * #43b) — the live form of `gl_poi_stablehash`: the reference's `run`
@@ -18,10 +17,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Two-tier design, mirroring the batch operator's parallel/sequential
   * split:
   *
-  *   1. **Distributed**: per-block FastHasher locals accumulate in
-  *      `flatMapGroupsWithState` keyed by block; the event-time timeout
-  *      finalizes a block once the watermark passes it (same protocol
-  *      as [[PoiStream]]). All the xxh3 hashing happens here, sharded.
+  *   1. **Distributed**: per-block changes accumulate in the
+  *      [[BlockBuffer]] keyed by block, which finalizes a block once the
+  *      watermark passes it (the buffer [[PoiStream]] runs too); its
+  *      FastHasher local is built from the batch operator's own
+  *      [[PoiStableHash.blockEvents]]. All the xxh3 hashing happens
+  *      here, sharded.
   *   2. **Driver fold**: finalized locals are 4 longs per block; a
   *      `foreachBatch` sink folds them into the running FldMix chain in
   *      block order — O(closed blocks) tiny rows per micro-batch, the
@@ -37,65 +38,16 @@ object PoiStableHashStream {
 
   case class ChangeEvent(blockNum: Long, id: String, op: String, value: String,
                          ts: Timestamp)
-  case class OpenBlock(events: List[(String, String, String)])
   /** One finalized block's local mixer — 4 longs, no payload. */
   case class BlockLocal(block_num: Long, v0: Long, v1: Long, v2: Long, cnt: Long)
 
-  private def finalizeBlock(blockNum: Long,
-                            state: GroupState[OpenBlock]): Iterator[BlockLocal] = {
-    val evs = state.getOption.map(_.events).getOrElse(Nil)
-    state.remove()
-    if (evs.isEmpty) Iterator.empty
-    else {
-      // same event construction + (id, op) order as the batch operator
-      val events: Seq[PoiEvent] = evs.sortBy(e => (e._1, e._2)).map { case (id, op, v) =>
-        if (op == "DELETE") RemoveEntity("user_state", id): PoiEvent
-        else SetEntity("user_state", id,
-          // null → "0" mirrors the batch extraction's valueText default
-          // (PoiStableHash.valueText); without it a NULL-valued change
-          // NPEs here and stream/batch POIs diverge
-          Seq("last_op" -> EString(op),
-            "value" -> EBigDecimal(Option(v).getOrElse("0")))): PoiEvent
-      }
-      val h = PoiStableHash.blockLocal(blockNum, events)
-      Iterator.single(BlockLocal(blockNum, h.mixer.v0, h.mixer.v1, h.mixer.v2, h.count))
-    }
-  }
-
-  private def accumulate(blockNum: Long, it: Iterator[ChangeEvent],
-                         state: GroupState[OpenBlock]): Iterator[BlockLocal] =
-    if (state.hasTimedOut) finalizeBlock(blockNum, state)
-    else {
-      // explicit late-row guard: flatMapGroupsWithState does not drop
-      // late data itself, and a straggler for a finalized block would
-      // re-emit a second local and corrupt the downstream chain fold
-      val wm = state.getCurrentWatermarkMs()
-      val onTime = it.filter(_.ts.getTime > wm).toSeq
-      val prev = state.getOption.map(_.events).getOrElse(Nil)
-      val all = prev ++ onTime.map(e => (e.id, e.op, e.value))
-      if (onTime.isEmpty) Iterator.empty
-      else {
-        state.update(OpenBlock(all))
-        // finalize when the watermark passes the block's OWN event
-        // time (ts = blockTs(blockNum), constant per block) — a wm+1
-        // timeout could close the block inside the watermark horizon,
-        // where an on-time straggler could re-open it and a second
-        // BlockLocal would corrupt every later chained POI
-        state.setTimeoutTimestamp(onTime.map(_.ts.getTime).max + 1)
-        Iterator.empty
-      }
-    }
-
   /** `changes` must carry an event-time `ts` with a watermark applied
     * by the caller (the delay = block-completion horizon). */
-  def blockLocals(changes: Dataset[ChangeEvent]): Dataset[BlockLocal] = {
-    implicit val se = Encoders.product[OpenBlock]
-    implicit val le = Encoders.product[BlockLocal]
-    changes
-      .groupByKey(_.blockNum)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(accumulate)
-  }
+  def blockLocals(changes: Dataset[ChangeEvent]): Dataset[BlockLocal] =
+    BlockBuffer.closeBlocks(changes)(_.blockNum, _.ts, e => (e.id, e.op, e.value)) { (bn, evs) =>
+      val h = PoiStableHash.blockLocal(bn, PoiStableHash.blockEvents(evs))
+      BlockLocal(bn, h.mixer.v0, h.mixer.v1, h.mixer.v2, h.count)
+    }
 
   /** Driver-held running chain. Fold input per batch = finalized block
     * locals (tiny); output = (block_num, chained 32-byte POI hex) in
@@ -110,34 +62,31 @@ object PoiStableHashStream {
     * batchId) triple the sink recorded atomically beside its last
     * write — the reference's cursor-next-to-output model — and a
     * replay of an already-committed batch id becomes a no-op. */
-  final class ChainFolder(seed: Option[(U192, Long)] = None,
+  final class ChainFolder(seed: (U192, Long) = (StableHash.MixInit, 0L),
                           seedBatchId: Long = -1L) {
-    private var mixer: Option[U192] = seed.map(_._1)
-    private var count = seed.map(_._2).getOrElse(0L)
+    private var state = seed
     private var committedBatch: Long = seedBatchId
 
     /** Committed resume cursor: chain state after the last committed
-      * batch (persist together with [[committedBatchId]]). */
-    def cursor: Option[(U192, Long)] = mixer.map(m => (m, count))
+      * batch (persist together with [[committedBatchId]]); a fresh
+      * folder's is `(MixInit, 0)`, the identity of the chain fold. */
+    def cursor: (U192, Long) = state
     def committedBatchId: Long = committedBatch
 
-    private def compute(locals: Seq[BlockLocal])
-        : (Seq[(Long, String)], Option[U192], Long) = {
-      var m = mixer
-      var c = count
+    private def compute(locals: Seq[BlockLocal]): (Seq[(Long, String)], (U192, Long)) = {
+      var (m, c) = state
       val out = locals.sortBy(_.block_num).map { l =>
-        val local = U192(l.v0, l.v1, l.v2)
-        m = Some(m.map(x => StableHash.mix(x, local)).getOrElse(local))
+        m = StableHash.mix(m, U192(l.v0, l.v1, l.v2))
         c += l.cnt
-        l.block_num -> PoiStableHash.hex(StableHash.FastHasher.from(m.get, c).toBytes)
+        l.block_num -> PoiStableHash.hex(StableHash.FastHasher.from(m, c).toBytes)
       }
-      (out, m, c)
+      (out, (m, c))
     }
 
     /** Immediate-commit fold (batch/spec use where delivery is exact). */
     def fold(locals: Seq[BlockLocal]): Seq[(Long, String)] = {
-      val (out, m, c) = compute(locals)
-      mixer = m; count = c
+      val (out, next) = compute(locals)
+      state = next
       out
     }
 
@@ -146,9 +95,9 @@ object PoiStableHashStream {
     def foldAndEmit(batchId: Long, locals: Seq[BlockLocal])
                    (emit: Seq[(Long, String)] => Unit): Unit =
       if (batchId > committedBatch) {
-        val (out, m, c) = compute(locals)
+        val (out, next) = compute(locals)
         emit(out)
-        mixer = m; count = c; committedBatch = batchId
+        state = next; committedBatch = batchId
       }
   }
 

@@ -2,19 +2,18 @@ package graft.streaming
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.PoiStableHash
+import org.apache.spark.sql.Dataset
 
 /** Streaming proof-of-indexing block digests (reference poi/poi.go:
   * the sinker hashes each block's events in order as they stream in,
   * emitting the digest when the block completes).
   *
   * Structured-Streaming re-expression: events keyed by block
-  * accumulate in `flatMapGroupsWithState` state; an EVENT-TIME TIMEOUT
-  * tied to the watermark finalizes a block — once the watermark passes
-  * the block's horizon no more events can arrive (late ones are
-  * dropped upstream), so the ordered digest is emitted exactly once.
-  * State per executor = events of the open blocks only.
+  * accumulate in the [[BlockBuffer]]; an EVENT-TIME TIMEOUT tied to the
+  * watermark finalizes a block — once the watermark passes the block's
+  * horizon no more events can arrive (late ones are dropped), so the
+  * ordered digest is emitted exactly once.
   *
   * The digest matches the batch [[graft.operators.Poi.blockDigest]]
   * exactly: md5 over '|'-joined reprs in block_num order.
@@ -23,12 +22,10 @@ object PoiStream {
 
   case class BlockEvent(block: Long, blockNum: Long, repr: String,
                         ts: java.sql.Timestamp)
-  case class OpenBlock(events: List[(Long, String)])
   case class BlockDigest(block: Long, digest: String, nEvents: Int)
 
   def md5Hex(s: String): String =
-    MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    PoiStableHash.hex(MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")))
 
   // sort by (blockNum, repr) — the batch digest array_sorts structs,
   // which tie-breaks equal block_nums on repr; sorting by blockNum
@@ -36,51 +33,12 @@ object PoiStream {
   def digestOf(events: Seq[(Long, String)]): String =
     md5Hex(events.sortBy(e => (e._1, e._2)).map(_._2).mkString("|"))
 
-  private def finalize(block: Long, state: GroupState[OpenBlock]): Iterator[BlockDigest] = {
-    val evs = state.getOption.map(_.events).getOrElse(Nil)
-    state.remove()
-    if (evs.isEmpty) Iterator.empty
-    else Iterator.single(BlockDigest(block, digestOf(evs), evs.length))
-  }
-
-  private def accumulate(block: Long, it: Iterator[BlockEvent],
-                         state: GroupState[OpenBlock]): Iterator[BlockDigest] =
-    if (state.hasTimedOut) finalize(block, state)
-    else {
-      // flatMapGroupsWithState does NOT auto-drop late rows (unlike
-      // aggregations/dedup) — an event arriving after its block
-      // finalized would re-open the key and emit a second, partial
-      // digest. Enforce the watermark contract explicitly.
-      val wm = state.getCurrentWatermarkMs()
-      val onTime = it.filter(_.ts.getTime > wm).toSeq
-      val prev = state.getOption.map(_.events).getOrElse(Nil)
-      val all = prev ++ onTime.map(e => (e.blockNum, e.repr))
-      if (onTime.isEmpty) Iterator.empty
-      else {
-        state.update(OpenBlock(all))
-        // finalize when the watermark passes the BLOCK'S OWN event
-        // time (constant per block — see blockDigests' contract), not
-        // merely when it next advances: a wm+1 timeout would let a
-        // block finalize while still inside the watermark horizon and
-        // an on-time straggler could then re-open it and emit a
-        // second, partial digest
-        state.setTimeoutTimestamp(onTime.map(_.ts.getTime).max + 1)
-        Iterator.empty
-      }
-    }
-
   /** `events` must carry an event-time `ts` with a watermark applied by
-    * the caller (the delay IS the block-completion horizon), and every
-    * event of one block must carry the BLOCK'S timestamp — constant
-    * within the block. That contract is what makes finalization safe:
-    * the block closes exactly when the watermark passes its timestamp,
-    * at which point any straggler for it is by definition late and the
-    * guard drops it. */
-  def blockDigests(events: Dataset[BlockEvent]): Dataset[BlockDigest] = {
-    implicit val se = Encoders.product[OpenBlock]
-    implicit val de = Encoders.product[BlockDigest]
-    events
-      .groupByKey(_.block)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(accumulate)
-  }
+    * the caller, every event of one block carrying the BLOCK'S
+    * timestamp — the [[BlockBuffer]] contract that makes finalization
+    * safe. */
+  def blockDigests(events: Dataset[BlockEvent]): Dataset[BlockDigest] =
+    BlockBuffer.closeBlocks(events)(_.block, _.ts, e => (e.blockNum, e.repr)) { (block, evs) =>
+      BlockDigest(block, digestOf(evs), evs.length)
+    }
 }

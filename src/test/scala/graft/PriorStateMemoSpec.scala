@@ -6,16 +6,29 @@ import graft.queries.GraphLoad
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The standing prior states behind gl_scd2_incremental and
-  * gl_squash_incremental: an in-place rewrite of the change stream
-  * rebuilds them, and invalidation unpersists them. */
+/** The standing artifacts the change stream backs — the prior states
+  * behind gl_scd2_incremental and gl_squash_incremental, the POI chain
+  * and the canonical undo set: an in-place rewrite of the change stream
+  * rebuilds them, and invalidation unpersists what they pin. */
 class PriorStateMemoSpec extends SparkSpec {
 
-  /** (memo name, incremental serve, full recompute) per family. */
+  /** A memoized key's full recompute: its serve after invalidation. */
+  private def rebuilt(name: String, serve: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (s, d) =>
+    SessionMemo.invalidate(s, d, name)
+    serve(s, d)
+  }
+
+  /** (memo name, memoized serve, full recompute, whether the artifact
+    * pins a persisted frame) per family. */
   private val families: Seq[(String, (SparkSession, String) => DataFrame,
-      (SparkSession, String) => DataFrame)] = Seq(
-    ("gl_scd2_prior", GraphLoad.glScd2Incremental, GraphLoad.glScd2Versions),
-    ("gl_squash_prior", GraphLoad.glSquashIncremental, GraphLoad.glSquashLatest))
+      (SparkSession, String) => DataFrame, Boolean)] = Seq(
+    ("gl_scd2_prior", GraphLoad.glScd2Incremental, GraphLoad.glScd2Versions, true),
+    ("gl_squash_prior", GraphLoad.glSquashIncremental, GraphLoad.glSquashLatest, true),
+    ("gl_poi_chain", GraphLoad.glPoiStablehash,
+      rebuilt("gl_poi_chain", GraphLoad.glPoiStablehash), true),
+    ("gl_undo_canonical", GraphLoad.glUndoCanonical,
+      rebuilt("gl_undo_canonical", GraphLoad.glUndoCanonical), false))
 
   private def tempEvents(events: DataFrame): String = {
     val d = Files.createTempDirectory("graft-prior-state").toString
@@ -49,7 +62,7 @@ class PriorStateMemoSpec extends SparkSpec {
 
   test("an in-place rewrite of the change stream rebuilds the prior states") {
     val d = tempEvents(Tables.events(spark, sf))
-    families.foreach { case (name, incremental, full) =>
+    families.foreach { case (name, incremental, full, _) =>
       assert(rows(incremental(spark, d)) === rows(full(spark, d)), name)
     }
     val before = Tables.mtime(d, "events")
@@ -57,7 +70,7 @@ class PriorStateMemoSpec extends SparkSpec {
     replaceEvents(d, Tables.events(spark, sf)
       .filter(col("event_id") % 3 =!= 0).withColumn("value", col("value") + 1.0))
     assert(Tables.mtime(d, "events") !== before, "the rewrite must bump the table's mtime")
-    families.foreach { case (name, incremental, full) =>
+    families.foreach { case (name, incremental, full, _) =>
       assert(rows(incremental(spark, d)) === rows(full(spark, d)), name)
     }
     SessionMemo.invalidateAll(spark, d)
@@ -70,10 +83,10 @@ class PriorStateMemoSpec extends SparkSpec {
       "invalidate" -> (name => assert(SessionMemo.invalidate(spark, d, name))),
       "invalidateAll" -> (name => assert(SessionMemo.invalidateAll(spark, d).contains(name)))
     ).foreach { case (how, drop) =>
-      families.foreach { case (name, incremental, _) =>
+      families.foreach { case (name, incremental, _, pins) =>
         val served = incremental(spark, d)
         assert(served.count() > 0)
-        assert(cachedSubtrees(served).nonEmpty, s"$name/$how: the prior state is not persisted")
+        assert(cachedSubtrees(served).nonEmpty === pins, s"$name/$how: persisted")
         drop(name)
         assert(cachedSubtrees(served).isEmpty, s"$name/$how: the prior state is still cached")
       }

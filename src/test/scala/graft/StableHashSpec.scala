@@ -75,6 +75,32 @@ class StableHashSpec extends AnyFunSuite {
     assert(leftFold === rightFold)
   }
 
+  test("MixInit is the identity of the mix (the chain folds start from it)") {
+    val rnd = new scala.util.Random(192L)
+    Seq.fill(1000)(U192(rnd.nextLong(), rnd.nextLong(), rnd.nextLong())).foreach { x =>
+      assert(StableHash.mix(x, StableHash.MixInit) === x)
+      assert(StableHash.mix(StableHash.MixInit, x) === x)
+    }
+    // mixing in a fresh hasher leaves a hasher's 32 bytes unchanged
+    val h = PoiStableHash.blockLocal(7L, Seq(RemoveEntity("user_state", "a")))
+    val before = h.toBytes
+    h.mixin(FastHasher())
+    assert(h.toBytes.sameElements(before))
+    // a folder seeded with a fresh folder's cursor emits the same POIs
+    // as an unseeded one, and both equal the sequential chain
+    val blocks = (1L to 20L).map { bn =>
+      bn -> Seq[PoiEvent](SetEntity("user_state", s"id$bn", Seq("value" -> EBigDecimal(s"$bn.5"))))
+    }
+    val locals = blocks.map { case (bn, evs) =>
+      val l = PoiStableHash.blockLocal(bn, evs)
+      graft.streaming.PoiStableHashStream.BlockLocal(bn, l.mixer.v0, l.mixer.v1, l.mixer.v2, l.count)
+    }
+    val fresh = new graft.streaming.PoiStableHashStream.ChainFolder()
+    val seeded = new graft.streaming.PoiStableHashStream.ChainFolder(fresh.cursor).fold(locals)
+    assert(seeded === new graft.streaming.PoiStableHashStream.ChainFolder().fold(locals))
+    assert(seeded === PoiStableHash.chainSequential(blocks))
+  }
+
   // ---- impls_test.go single values ----------------------------------------
 
   test("FastHash single-value vectors") {
